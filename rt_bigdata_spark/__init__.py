@@ -10,11 +10,9 @@ ODS→DWD→DWM→DWS pipeline) as an idiomatic Spark engine:
 - declarative DataFrame/SQL plans so Catalyst handles pushdown,
   pruning, join strategy and partial aggregation,
 - stateful streaming semantics (visitor correction, UV dedup, bounce
-  detection, funnel progression) on BOTH state engines:
-  ``applyInPandasWithState`` (streaming/stateful.py) and Spark 4's
-  transformWithState (streaming/stateful_v2.py — native TTL, named
-  event-time timers), sharing per-key scan kernels so the engines
-  cannot drift,
+  detection, funnel progression and abandonment, curation id-dedup)
+  on ``applyInPandasWithState`` with event- and processing-time
+  timeouts (streaming/stateful.py),
 - large-scale training-data ops (dedup, similarity search, text
   analysis, multimodal plumbing) on the same DataFrame substrate.
 """

@@ -140,7 +140,8 @@ def unique_visit_app(page: DataFrame, streaming: bool = True, ttl: bool = False)
 
 def user_jump_detail_app(page: DataFrame) -> DataFrame:
     """UserJumpDetailApp: bounce detection (T3 CEP-timeout). Streaming
-    input must carry a watermarked ``eventTime`` column."""
+    input must carry a watermarked timestamp column (any name, e.g.
+    ``withWatermark("eventTime", …)``) for the timeout to fire."""
     from rt_bigdata_spark.streaming.stateful import detect_bounces
 
     return detect_bounces(page)

@@ -4383,6 +4383,15 @@ WHERE rk <= {k}
 
 
 for spec in [
+    # r17 ROTATION LEDGER (scripts/rotation_plan.py): the ten r10-green
+    # specs due under the staleness bound pulled back at priority=40
+    # (ngram_jaccard, source_mix, text_quality here; json_props,
+    # key_skew, keyword_stats, product_stats, province_stats,
+    # scalar_datetime, supplier_volume in warehouse.py). Ten 7-8-green
+    # occupants yielded at priority=80 (doc_curation, doc_keywords,
+    # dup_clusters, embedding_dedup_lsh, filtered_ann_indexed,
+    # global_shuffle, mix_schedule, stratified_sample here;
+    # event_anomalies, events_rollup in warehouse.py).
     # r14 ROTATION LEDGER: half of the 36-spec r9-green cohort (due r16)
     # pulled back at priority=40 (bm25_search, bpe_merges, bpe_encode,
     # concat_pack, contamination, contrastive_samples, dedup_keepers,
@@ -4400,7 +4409,7 @@ for spec in [
     # per-spec comments below this point are the PRIOR rounds' ledger.
     QuerySpec("dedup_exact", q_dedup_exact, _ORACLE_DEDUP_EXACT, ("dedup",), bench=True, priority=40),
     QuerySpec("doc_fingerprint", q_doc_fingerprint, _ORACLE_FINGERPRINT, ("text",), priority=40),
-    QuerySpec("text_quality", q_text_quality, _ORACLE_QUALITY, ("text",), bench=True, priority=80),
+    QuerySpec("text_quality", q_text_quality, _ORACLE_QUALITY, ("text",), bench=True, priority=40),
     QuerySpec("language_id", q_language_id, _ORACLE_LANG, ("text",), priority=80),
     # r15 sixth registration: Unicode script/charset profile — the
     # pre-langid curation signal; new spec, must land in the window
@@ -4411,7 +4420,7 @@ for spec in [
     # (bpe_encode — four greens, re-greened r14 — yielded)
     QuerySpec("source_length_psi", q_source_length_psi, _source_length_psi_oracle(), ("profiling", "audit"), priority=10),
     QuerySpec("token_stats", q_token_stats, _ORACLE_TOKEN_STATS, ("text",), priority=80),
-    QuerySpec("ngram_jaccard", q_ngram_jaccard, _ORACLE_JACCARD, ("dedup",), bench=True, priority=80),
+    QuerySpec("ngram_jaccard", q_ngram_jaccard, _ORACLE_JACCARD, ("dedup",), bench=True, priority=40),
     # r15 tenth registration: asymmetric containment (the quotation/
     # subset-dup detector); new spec, must land in the window
     # (media_resize — four greens, re-greened r14 — yielded)
@@ -4457,7 +4466,7 @@ for spec in [
     QuerySpec("ann_ivf_trained", q_ann_ivf_trained, _ann_ivf_trained_oracle(), ("similarity", "approx", "model"), priority=10),
     # (six greens r1-r7; yielded its slot in r8's second batch)
     QuerySpec("embedding_dedup", q_embedding_dedup, _emb_lsh_oracle(threshold=0.4), ("dedup", "approx"), bench=True, priority=80),
-    QuerySpec("embedding_dedup_lsh", q_embedding_dedup_lsh, _emb_lsh_oracle(), ("dedup", "approx"), bench=True, priority=40),
+    QuerySpec("embedding_dedup_lsh", q_embedding_dedup_lsh, _emb_lsh_oracle(), ("dedup", "approx"), bench=True, priority=80),
     # r10: the SemDeDup τ tuning curve — new spec, must land in the
     # window (bpe_encode, thrice-green, yielded its slot;
     # bpe_encode_tokens keeps the tokenizer family in-window)
@@ -4477,8 +4486,8 @@ for spec in [
     # r15: the real stdlib-wave codec path driver-verified end to end
     # (verdict r14 item 5); winnow_pairs — five greens — yielded
     QuerySpec("media_wav_decode", q_media_wav_decode, _ORACLE_MEDIA_WAV_DECODE, ("multimodal", "codec"), priority=10),
-    QuerySpec("doc_curation", q_doc_curation, _ORACLE_CURATION, ("text", "dedup"), bench=True, priority=40),
-    QuerySpec("dup_clusters", q_dup_clusters, _ORACLE_CLUSTERS, ("dedup", "iterative"), bench=True, priority=40),
+    QuerySpec("doc_curation", q_doc_curation, _ORACLE_CURATION, ("text", "dedup"), bench=True, priority=80),
+    QuerySpec("dup_clusters", q_dup_clusters, _ORACLE_CLUSTERS, ("dedup", "iterative"), bench=True, priority=80),
     QuerySpec("doc_split", q_doc_split, _ORACLE_SPLIT_DOCS, ("sampling",), priority=40),
     QuerySpec("cluster_split", q_cluster_split, _ORACLE_CLUSTER_SPLIT, ("sampling", "dedup"), bench=True, priority=80),
     # r13: corpus_profile (4 driver greens, last r12) yielded its
@@ -4489,8 +4498,8 @@ for spec in [
     # round-6: the broadcast-threshold scale form of quality_gate
     QuerySpec("quality_gate_threshold", q_quality_gate_threshold, _ORACLE_QUALITY_GATE_THRESHOLD, ("profiling", "approx", "scale"), bench=True, priority=40),
     QuerySpec("unigram_surprisal", q_unigram_surprisal, _ORACLE_SURPRISAL, ("text", "profiling"), priority=80),
-    QuerySpec("doc_keywords", q_doc_keywords, _ORACLE_KEYWORDS, ("text", "window_fn"), bench=True, priority=40),
-    QuerySpec("source_mix", q_source_mix, _mix_oracle(), ("sampling",), priority=80),
+    QuerySpec("doc_keywords", q_doc_keywords, _ORACLE_KEYWORDS, ("text", "window_fn"), bench=True, priority=80),
+    QuerySpec("source_mix", q_source_mix, _mix_oracle(), ("sampling",), priority=40),
     # priority=10: the round-4 additions were parked at 70 (outside the
     # driver's 50-row window) for one round; round 5 rotates them IN —
     # they are the only oracle-backed specs that have never had a
@@ -4513,14 +4522,14 @@ for spec in [
     QuerySpec("doc_chunks_overlap", q_doc_chunks_overlap, _ORACLE_CHUNKS_OVERLAP, ("text", "packing"), priority=10),
     QuerySpec("token_budget", q_token_budget, _ORACLE_TOKEN_BUDGET, ("sampling", "packing"), bench=True, priority=40),
     QuerySpec("filtered_ann", q_filtered_ann, _ORACLE_FILTERED_ANN, ("similarity", "join"), priority=80),
-    QuerySpec("filtered_ann_indexed", q_filtered_ann_indexed, _filtered_ann_ivf_oracle(), ("similarity", "join", "index"), bench=True, priority=40),
+    QuerySpec("filtered_ann_indexed", q_filtered_ann_indexed, _filtered_ann_ivf_oracle(), ("similarity", "join", "index"), bench=True, priority=80),
     # round-5 additions (training-order / packing bookkeeping); three
     # more multi-round greens (payment_wide, uv_dedup, log_split)
     # yielded window slots so these verify on their first round.
     QuerySpec("concat_pack", q_concat_pack, _ORACLE_CONCAT_PACK, ("packing",), priority=80),
     QuerySpec("paragraph_dedup", q_paragraph_dedup, _ORACLE_PARAGRAPH_DEDUP, ("dedup", "text"), bench=True, priority=40),
-    QuerySpec("global_shuffle", q_global_shuffle, _ORACLE_GLOBAL_SHUFFLE, ("sampling", "order"), priority=40),
-    QuerySpec("mix_schedule", q_mix_schedule, _mix_schedule_oracle(), ("sampling", "order"), priority=40),
+    QuerySpec("global_shuffle", q_global_shuffle, _ORACLE_GLOBAL_SHUFFLE, ("sampling", "order"), priority=80),
+    QuerySpec("mix_schedule", q_mix_schedule, _mix_schedule_oracle(), ("sampling", "order"), priority=80),
     # round-5 second batch (semantic clustering, search, versioning);
     # five multi-round greens (text_quality, ann_cosine_topk,
     # corpus_profile, quality_gate, unigram_surprisal) yielded window
@@ -4532,7 +4541,7 @@ for spec in [
     # fusion — the standard RAG composition; new spec, must land in the
     # window (dsir_importance — four greens, re-greened r14 — yielded)
     QuerySpec("hybrid_search_rrf", q_hybrid_search_rrf, _hybrid_rrf_oracle(), ("text", "search", "similarity"), priority=10),
-    QuerySpec("stratified_sample", q_stratified_sample, _ORACLE_STRATIFIED, ("sampling",), priority=40),
+    QuerySpec("stratified_sample", q_stratified_sample, _ORACLE_STRATIFIED, ("sampling",), priority=80),
     # r15: exactly-N weighted sampling with unbiased subset-sum
     # estimators (priority sampling); nation_trade — five greens —
     # yielded its window slot

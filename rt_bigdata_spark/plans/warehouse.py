@@ -2494,8 +2494,8 @@ WHERE rk <= {_SIM_USERS_K}
 for spec in [
     QuerySpec("pricing_summary", q_pricing_summary, _ORACLE_PRICING, ("agg", "A6", "A8"), bench=True, priority=80),
     QuerySpec("visitor_stats", q_visitor_stats, _ORACLE_VISITOR, ("agg", "window", "A1"), bench=True, priority=80),
-    QuerySpec("province_stats", q_province_stats, _ORACLE_PROVINCE, ("agg", "join", "A3", "J3"), bench=True, priority=80),
-    QuerySpec("keyword_stats", q_keyword_stats, _ORACLE_KEYWORD, ("udtf", "U1", "J5", "A4"), bench=True, priority=80),
+    QuerySpec("province_stats", q_province_stats, _ORACLE_PROVINCE, ("agg", "join", "A3", "J3"), bench=True, priority=40),
+    QuerySpec("keyword_stats", q_keyword_stats, _ORACLE_KEYWORD, ("udtf", "U1", "J5", "A4"), bench=True, priority=40),
     # r13: keyword_c2r (5 driver greens, last r12) yielded its window
     # slot to the new minhash_spanning registration
     QuerySpec("keyword_c2r", q_keyword_c2r, _ORACLE_C2R, ("udtf", "U2"), priority=80),
@@ -2513,7 +2513,7 @@ for spec in [
     QuerySpec("order_wide_enriched", q_order_wide_enriched, _ORACLE_ENRICHED, ("join", "J3"), bench=True, priority=80),
     QuerySpec("ads_report", q_ads_report, _ORACLE_ADS, ("agg", "A6"), priority=80),
     QuerySpec("shipping_priority", q_shipping_priority, _ORACLE_SHIP_PRIO, ("join", "J4", "A6", "W2", "W3"), bench=True, priority=80),
-    QuerySpec("supplier_volume", q_supplier_volume, _ORACLE_SUPPLIER_VOLUME, ("join", "J4", "A6"), bench=True, priority=80),
+    QuerySpec("supplier_volume", q_supplier_volume, _ORACLE_SUPPLIER_VOLUME, ("join", "J4", "A6"), bench=True, priority=40),
     QuerySpec("top_k_products", q_top_k_products, _ORACLE_TOPK, ("window_fn", "W1", "W3"), priority=80),
     QuerySpec("uv_dedup", q_uv_dedup, _ORACLE_UV, ("stateful", "T2"), priority=80),
     QuerySpec("is_new_correction", q_is_new_correction, _ORACLE_IS_NEW, ("stateful", "T1"), priority=80),
@@ -2521,9 +2521,9 @@ for spec in [
     QuerySpec("cdc_routing", q_cdc_routing, _ORACLE_ROUTING, ("routing", "R2"), priority=40),
     QuerySpec("log_split", q_log_split, _ORACLE_SPLIT, ("routing", "R1"), priority=80),
     QuerySpec("union_stats", q_union_stats, _ORACLE_UNION, ("routing", "R3"), priority=80),
-    QuerySpec("scalar_datetime", q_scalar_datetime, _ORACLE_SCALAR_DT, ("scalar", "F4", "F5", "F6", "F7", "F8"), priority=80),
-    QuerySpec("json_props", q_json_props, _ORACLE_JSON, ("projection", "P1", "P6", "F13"), priority=80),
-    QuerySpec("product_stats", q_product_stats, _ORACLE_PRODUCT_STATS, ("agg", "A2", "R3"), bench=True, priority=80),
+    QuerySpec("scalar_datetime", q_scalar_datetime, _ORACLE_SCALAR_DT, ("scalar", "F4", "F5", "F6", "F7", "F8"), priority=40),
+    QuerySpec("json_props", q_json_props, _ORACLE_JSON, ("projection", "P1", "P6", "F13"), priority=40),
+    QuerySpec("product_stats", q_product_stats, _ORACLE_PRODUCT_STATS, ("agg", "A2", "R3"), bench=True, priority=40),
     QuerySpec("business_rules", q_business_rules, _ORACLE_BIZ, ("scalar", "F9", "F10", "F11"), priority=40),
     QuerySpec("session_stats", q_session_stats, _ORACLE_SESSION, ("agg", "window", "T3", "T5"), priority=80),
     QuerySpec("sliding_stats", q_sliding_stats, _ORACLE_SLIDING, ("agg", "window", "T5"), priority=80),
@@ -2559,14 +2559,14 @@ for spec in [
     # round-5 fifth batch (Markov transitions + hypertable rollup);
     # slots yielded by the four textops-side demotions (see textops.py)
     QuerySpec("event_transitions", q_event_transitions, _ORACLE_TRANSITIONS, ("behavior", "window_fn", "agg"), priority=80),
-    QuerySpec("events_rollup", q_events_rollup, _ORACLE_EVENTS_ROLLUP, ("agg", "timeseries"), priority=40),
+    QuerySpec("events_rollup", q_events_rollup, _ORACLE_EVENTS_ROLLUP, ("agg", "timeseries"), priority=80),
     # round-5 sixth batch (sessionization; keyword_stats — green r1-r4
     # — yields its slot on the textops side alongside order_wide)
     QuerySpec("user_sessions", q_user_sessions, _ORACLE_USER_SESSIONS, ("behavior", "window_fn", "T3"), priority=80),
     # round-5 seventh batch (single-table DQ suite; visitor_stats +
     # province_stats — green r1-r4 — yield their slots)
     QuerySpec("dq_orders", q_dq_orders, _ORACLE_DQ_ORDERS, ("audit", "agg"), priority=80),
-    QuerySpec("key_skew", q_key_skew, _ORACLE_KEY_SKEW, ("audit", "scale"), priority=80),
+    QuerySpec("key_skew", q_key_skew, _ORACLE_KEY_SKEW, ("audit", "scale"), priority=40),
     # round-8: the mitigation key_skew diagnoses for (r7 verdict item 3)
     QuerySpec("salted_enrichment", q_salted_enrichment, _ORACLE_SALTED_ENRICHMENT, ("join", "scale", "skew"), priority=80),
     # round-5 eighth batch (SCD-2 consumption side; pricing_summary —
@@ -2577,7 +2577,7 @@ for spec in [
     # round-5 tenth batch (statistical outliers; ngram_jaccard — green
     # r1-r4, unchanged — yields its slot so the re-shaped
     # embedding_dedup keeps its place)
-    QuerySpec("event_anomalies", q_event_anomalies, _ORACLE_EVENT_ANOMALIES, ("audit", "agg", "stats"), priority=40),
+    QuerySpec("event_anomalies", q_event_anomalies, _ORACLE_EVENT_ANOMALIES, ("audit", "agg", "stats"), priority=80),
     # round-5 twelfth batch (cascade path driver-verified; sales_cube
     # — green r4 — yields its slot)
     QuerySpec("events_rollup_daily", q_events_rollup_daily, _ORACLE_EVENTS_ROLLUP_DAILY, ("agg", "timeseries", "incremental"), priority=40),

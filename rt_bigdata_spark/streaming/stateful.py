@@ -18,6 +18,11 @@ one batch) so semantics are testable without a streaming harness.
   match is the output: an entry page with no follow-up within 10 s is
   a bounce.
 
+Two generalizations ride on the same operator: ``track_funnel`` (the
+ordered-sequence CEP pattern, with an optional ``within()``-style
+abandonment timeout) and ``dedup_docs`` (exact id-level dedup in front
+of the curation sinks, with an optional create-and-write state TTL).
+
 Scale notes: state is per-mid and O(bytes); the shuffle is the
 unavoidable keyBy. With RocksDB state store
 (``spark.sql.streaming.stateStore.providerClass``) state spills to
@@ -79,6 +84,7 @@ BOUNCE_OUT_SCHEMA = StructType(
 )
 
 _DAY_MS = 86_400_000
+_WATERMARK_KEY = "spark.watermarkDelayMs"  # EventTimeWatermark.delayKey
 
 
 def _day(ts_ms: int) -> str:
@@ -87,10 +93,11 @@ def _day(ts_ms: int) -> str:
 
 def _prune_for_state(events: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     """Project to exactly the columns the stateful kernel reads — plus
-    the watermarked ``eventTime`` column when present, since dropping
-    it would detach the query's watermark/timeout machinery — BEFORE
-    the keyed shuffle and the Arrow boundary (r16, guide §4.1/§2.3):
-    applyInPandasWithState / transformWithStateInPandas ship EVERY
+    every watermarked column, found from the plan (``withWatermark``
+    tags its field with ``spark.watermarkDelayMs`` metadata) rather than
+    by name, since dropping it would detach the query's watermark and
+    event-time timeouts — BEFORE the keyed shuffle and the Arrow
+    boundary (guide §4.1/§2.3): applyInPandasWithState ships EVERY
     column of the grouped frame to the Python worker, and Spark cannot
     see which fields the function touches, so a wide production log
     schema would otherwise cross the state-store shuffle and the
@@ -98,23 +105,22 @@ def _prune_for_state(events: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     unchanged: the kernels read only these fields, and the output
     schema is fixed by outputStructType either way."""
     keep = list(cols)
-    if "eventTime" in events.columns and "eventTime" not in keep:
-        keep.append("eventTime")
+    keep += [
+        f.name for f in events.schema.fields if _WATERMARK_KEY in f.metadata and f.name not in keep
+    ]
     return events.select(*keep)
 
 
 # --- T1 ---------------------------------------------------------------------
 
 
-def _is_new_scan(
-    pdfs: Iterable[pd.DataFrame], first_date: str | None
-) -> tuple[list[dict[str, Any]], str | None]:
-    """Shared T1 kernel (rows_to_emit, new_first_date): rewrite
-    is_new=1 → 0 when the mid has an earlier first-visit date
-    (OdsBaseLogApp.scala:90-135). ONE pure function consumed by BOTH
-    engines (``_is_new_fn`` here, ``stateful_v2.IsNewProcessor``) so
-    the reference semantics cannot drift between them (r7 verdict
-    item 8)."""
+def _is_new_fn(
+    key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """T1 on applyInPandasWithState. State: first visit date string.
+    Rewrites is_new=1 → 0 when the mid has an earlier first-visit date
+    (OdsBaseLogApp.scala:90-135)."""
+    (first_date,) = state.get if state.exists else (None,)
     rows: list[dict[str, Any]] = []
     for pdf in pdfs:
         for r in pdf.sort_values("ts").itertuples(index=False):
@@ -133,15 +139,6 @@ def _is_new_scan(
             rows.append(
                 {"mid": r.mid, "page_id": r.page_id, "last_page_id": r.last_page_id, "is_new": is_new, "ts": r.ts}
             )
-    return rows, first_date
-
-
-def _is_new_fn(
-    key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """T1 on applyInPandasWithState. State: first visit date string."""
-    (first_date,) = state.get if state.exists else (None,)
-    rows, first_date = _is_new_scan(pdfs, first_date)
     state.update((first_date,))
     yield pd.DataFrame(rows, columns=[f.name for f in IS_NEW_OUT_SCHEMA.fields])
 
@@ -237,26 +234,20 @@ def _bounce_scan(
     pdfs: Iterable[pd.DataFrame],
     pending_page: str | None,
     pending_ts: int | None,
-    on_resolved=None,
 ) -> tuple[list[dict[str, Any]], str | None, int | None]:
     """Shared T3 kernel (rows_to_emit, pending_page, pending_ts): hold
     each entry event (empty last_page_id); the NEXT event for the mid
     resolves the held entry — gap > 10 s emits it as a bounce, within
-    10 s discards it (UserJumpDetailApp.scala:93-140). ``on_resolved``
-    fires (with the resolved entry's ts) whenever a held entry is
-    resolved by a successor — the v2 engine uses it to delete that
-    entry's registered timer. ONE pure function consumed by all three
-    callers (``_bounce_fn``, ``detect_bounces_batch``,
-    ``stateful_v2.BounceProcessor``) so the CEP semantics cannot drift
-    between engines (r7 verdict item 8)."""
+    10 s discards it (UserJumpDetailApp.scala:93-140). One pure
+    function consumed by the streaming (``_bounce_fn``) and batch
+    (``detect_bounces_batch``) paths so their CEP semantics cannot
+    drift."""
     rows: list[dict[str, Any]] = []
     for pdf in pdfs:
         for r in pdf.sort_values("ts").itertuples(index=False):
             if pending_ts is not None:
                 if r.ts - pending_ts > BOUNCE_TIMEOUT_MS:
                     rows.append({"mid": r.mid, "page_id": pending_page, "ts": pending_ts})
-                if on_resolved is not None:
-                    on_resolved(pending_ts)
                 pending_page, pending_ts = None, None
             if r.last_page_id is None or r.last_page_id == "":
                 pending_page, pending_ts = r.page_id, r.ts
@@ -293,9 +284,10 @@ def _bounce_fn(key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState)
 
 
 def detect_bounces(events: DataFrame) -> DataFrame:
-    """Streaming bounce detection. ``events`` must carry an
-    ``eventTime`` timestamp column with a watermark for the timeout to
-    fire (e.g. ``withWatermark("eventTime", "2 seconds")``)."""
+    """Streaming bounce detection. ``events`` must carry a watermarked
+    timestamp column for the timeout to fire, under any name (e.g.
+    ``withWatermark("eventTime", "2 seconds")``); the watermarked
+    column survives the state projection."""
     events = _prune_for_state(events, ("mid", "page_id", "last_page_id", "ts"))
     return events.groupBy("mid").applyInPandasWithState(
         _bounce_fn,
@@ -343,7 +335,7 @@ FUNNEL_OUT_SCHEMA = StructType(
 )
 
 
-def _funnel_fn_factory(steps: tuple[str, ...]):
+def _funnel_fn_factory(steps: tuple[str, ...], abandon_timeout_ms: int | None = None):
     """Per-user funnel advance: state = (stage, reach_ts); an event
     advances the funnel iff it is the NEXT step's type at-or-after the
     time the current stage was reached (the same inclusive `>=`
@@ -362,14 +354,42 @@ def _funnel_fn_factory(steps: tuple[str, ...]):
     ``>=`` — a bare unstable ts sort would count or miss the tied
     click depending on arbitrary tie order. NULL users are dropped,
     mirroring the batch operator.
+
+    With ``abandon_timeout_ms`` the state also holds the attempt's
+    deadline: the stage-1 row's ts + timeout, set at the first advance
+    (Flink CEP ``within()`` anchors at the pattern's FIRST match, not at
+    the last stage reached). The event-time timeout is re-armed at the
+    deadline on every call while the funnel is incomplete; when it
+    fires the function emits ``(user_id, -stage, deadline)`` and
+    removes the state — ``within()`` DISCARDS a timed-out partial
+    match, so later events start a fresh attempt from stage 0.
     """
+    cols = [f.name for f in FUNNEL_OUT_SCHEMA.fields]
+
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         stage, reach_ts = (state.get if state.exists else (0, None))
         rows, stage, reach_ts = _funnel_scan(key[0], pdfs, steps, stage, reach_ts)
         state.update((stage, reach_ts))
-        yield pd.DataFrame(rows, columns=[f.name for f in FUNNEL_OUT_SCHEMA.fields])
+        yield pd.DataFrame(rows, columns=cols)
 
-    return fn
+    def fn_abandon(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            stage, _, deadline = state.get
+            state.remove()
+            yield pd.DataFrame([{"user_id": key[0], "funnel_stage": -stage, "reached_ts": deadline}], columns=cols)
+            return
+        stage, reach_ts, deadline = (state.get if state.exists else (0, None, None))
+        rows, new_stage, reach_ts = _funnel_scan(key[0], pdfs, steps, stage, reach_ts)
+        if stage == 0 and 0 < new_stage < len(steps):
+            deadline = int(rows[0]["reached_ts"]) + abandon_timeout_ms
+        state.update((new_stage, reach_ts, deadline))
+        if deadline is not None and new_stage < len(steps):
+            # never at/below the watermark (Spark rejects it): a deadline
+            # the watermark already passed fires in the next batch
+            state.setTimeoutTimestamp(max(deadline, state.getCurrentWatermarkMs() + 1))
+        yield pd.DataFrame(rows, columns=cols)
+
+    return fn if abandon_timeout_ms is None else fn_abandon
 
 
 def _funnel_scan(
@@ -379,11 +399,10 @@ def _funnel_scan(
     stage: int,
     reach_ts,
 ) -> tuple[list[dict], int, "int | None"]:
-    """The ONE funnel-advance kernel shared by the v1
-    (applyInPandasWithState) and v2 (transformWithState) engines — the
-    stateful shared-kernel rule: pool the group's Arrow chunks, sort
-    once on (ts, step-rank), advance on next-step matches at-or-after
-    the current reach time. Returns (emitted rows, stage, reach_ts)."""
+    """The one funnel-advance kernel: pool the group's Arrow chunks,
+    sort once on (ts, step-rank), advance on next-step matches
+    at-or-after the current reach time. Returns (emitted rows, stage,
+    reach_ts)."""
     rank = {s: i for i, s in enumerate(steps)}
     rows: list[dict[str, Any]] = []
     chunks = [pdf for pdf in pdfs if len(pdf)]
@@ -404,23 +423,126 @@ def _funnel_scan(
     return rows, stage, reach_ts
 
 
-def track_funnel(events: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")) -> DataFrame:
+def track_funnel(
+    events: DataFrame,
+    steps: tuple[str, ...] = ("view", "click", "purchase"),
+    abandon_timeout_ms: int | None = None,
+) -> DataFrame:
     """Streaming funnel progression: append-mode rows
     ``(user_id, funnel_stage, reached_ts)`` emitted as each user
     advances a stage — the ordered-sequence CEP pattern
     (begin(step1).followedBy(step2)…) the reference expresses in
     Flink CEP, over the same keyBy shuffle. State per user is two
     numbers; at production user counts pair with the RocksDB state
-    store exactly like T1-T3."""
+    store exactly like T1-T3.
+
+    With ``abandon_timeout_ms`` set, ``events`` must carry a watermarked
+    timestamp column, and an incomplete funnel whose deadline the
+    watermark passes emits one terminal abandonment row
+    ``(user_id, -stage, deadline)`` (Flink CEP ``within()``'s timed-out
+    channel; see ``_funnel_fn_factory``)."""
     events = _prune_for_state(events, ("user_id", "event_type", "ts"))
+    timed = abandon_timeout_ms is not None
     return (
         events.filter(events["user_id"].isNotNull())
         .groupBy("user_id")
         .applyInPandasWithState(
-            _funnel_fn_factory(tuple(steps)),
+            _funnel_fn_factory(tuple(steps), abandon_timeout_ms),
             outputStructType=FUNNEL_OUT_SCHEMA,
-            stateStructType="stage LONG, reach_ts LONG",
+            stateStructType="stage LONG, reach_ts LONG" + (", deadline LONG" if timed else ""),
             outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout if timed else GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+# --- Curation id-dedup ------------------------------------------------------
+
+DEDUP_DOC_OUT_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+    ]
+)
+
+
+def _doc_seen_scan(pdfs: Iterable[pd.DataFrame]) -> str | None:
+    """Doc-seen kernel: the representative text of one doc_id's rows in
+    one batch, the lexicographically SMALLEST non-null text — a
+    deterministic choice where "whichever row Spark hands over first"
+    would make replays of the same batch emit different rows; null
+    texts lose to any string, all-null keeps None."""
+    texts = [t for pdf in pdfs for t in pdf["text"].tolist() if isinstance(t, str)]
+    return min(texts) if texts else None
+
+
+def _dedup_docs_fn_factory(ttl_ms: int | None):
+    """State = the doc's admission time (batch processing time). A key
+    with no live admission emits its representative and records the
+    admission; every later row for it is dropped. With ``ttl_ms`` the
+    TTL is create-and-write like the UV filter's StateTtlConfig: it
+    runs from admission, a redelivery never extends it (the
+    processing-time timeout is re-armed with the REMAINING duration on
+    every call, since Spark clears it on each call), and once it lapses
+    the admission is forgotten — the timeout removes the state, and a
+    redelivery that beats the timeout sweep reads it as absent — so the
+    next delivery is admitted afresh."""
+    cols = [f.name for f in DEDUP_DOC_OUT_SCHEMA.fields]
+
+    def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            yield pd.DataFrame([], columns=cols)
+            return
+        rep = _doc_seen_scan(pdfs)
+        now = state.getCurrentProcessingTimeMs()
+        (admitted,) = state.get if state.exists else (None,)
+        rows: list[dict[str, Any]] = []
+        if admitted is None or (ttl_ms is not None and now - admitted >= ttl_ms):
+            rows.append({"doc_id": key[0], "text": rep})
+            admitted = now
+            state.update((admitted,))
+        if ttl_ms is not None:
+            state.setTimeoutDuration(admitted + ttl_ms - now)
+        yield pd.DataFrame(rows, columns=cols)
+
+    return fn
+
+
+def dedup_docs(docs: DataFrame, ttl_ms: int | None = None) -> DataFrame:
+    """Streaming exact-id dedup of ``(doc_id, text)`` rows for the
+    curation ingest path: keyed by doc_id, the FIRST occurrence passes
+    and every redelivery (at-least-once source, replayed extract,
+    duplicated upstream shard) is dropped before the expensive
+    near-dup/index sinks run (near_dup_maintenance_sink → keepers →
+    ivf_index_maintenance_sink). Content dups under DIFFERENT ids pass:
+    they are the near-dup store's job. The reference's analog is the
+    keyed ValueState dedup the UV filter builds on
+    (UniqueVisitApp.scala:87-116), generalized from (mid, day) to a
+    curation key.
+
+    Exactness contract: without ``ttl_ms`` the gate is exact and its
+    state unbounded; with ``ttl_ms`` it is exact WITHIN the TTL horizon
+    only — a redelivery arriving after the admission ages out is
+    re-admitted by design (the bounded-state trade the reference's
+    StateTtlConfig UV filter makes). When duplicate ids inside one batch
+    carry differing text, the representative is the smallest text of
+    the batch (``_doc_seen_scan``); across batches the first-admitted
+    batch's representative wins. With ``ttl_ms`` Spark runs a
+    micro-batch on every trigger to sweep the processing-time
+    timeouts, new data or not, so give such a query a trigger
+    interval."""
+    docs = _prune_for_state(docs, ("doc_id", "text"))
+    return (
+        docs.filter(docs["doc_id"].isNotNull())
+        .groupBy("doc_id")
+        .applyInPandasWithState(
+            _dedup_docs_fn_factory(ttl_ms),
+            outputStructType=DEDUP_DOC_OUT_SCHEMA,
+            stateStructType="admitted_ms LONG",
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.NoTimeout if ttl_ms is None else GroupStateTimeout.ProcessingTimeTimeout
+            ),
         )
     )

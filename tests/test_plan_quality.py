@@ -670,14 +670,16 @@ def test_packed_sequences_caller_owned_persist_is_bounded(spark):
             jrdd.unpersist()
 
 
-def test_stateful_kernels_prune_columns_before_python_boundary(spark):
+def test_stateful_kernels_prune_columns_before_python_boundary(spark, tmp_path):
     """r16 streaming fix (guide §4.1): stateful kernels must project to
-    exactly the columns they read (plus the watermarked ``eventTime``)
-    BEFORE the keyed shuffle and the JVM→Arrow→Python boundary — Spark
+    exactly the columns they read (plus the watermarked column) BEFORE
+    the keyed shuffle and the JVM→Arrow→Python boundary — Spark
     cannot prune columns it cannot see into an opaque Python function,
     so a wide production log schema would otherwise cross both in full
-    every micro-batch. Pins the projection helper and that the batch
-    bounce kernel is insensitive to extra payload columns."""
+    every micro-batch. The watermarked column is found from the plan
+    (its ``spark.watermarkDelayMs`` metadata), whatever its name. Pins
+    the projection helper and that the batch bounce kernel is
+    insensitive to extra payload columns."""
     import pyspark.sql.functions as F
 
     from rt_bigdata_spark.streaming.stateful import (
@@ -685,18 +687,24 @@ def test_stateful_kernels_prune_columns_before_python_boundary(spark):
         detect_bounces_batch,
     )
 
-    wide = spark.createDataFrame(
-        [("101", "home", None, "1", 10000, "x" * 64, 1.5)],
-        "mid: string, page_id: string, last_page_id: string, is_new: string,"
-        " ts: long, payload: string, score: double",
-    ).withColumn("eventTime", F.timestamp_millis(F.col("ts")))
+    schema = (
+        "mid STRING, page_id STRING, last_page_id STRING, is_new STRING,"
+        " ts LONG, payload STRING, score DOUBLE"
+    )
+    wide = spark.createDataFrame([("101", "home", None, "1", 10000, "x" * 64, 1.5)], schema)
+    stream = spark.readStream.schema(schema).json(str(tmp_path))
 
-    pruned = _prune_for_state(wide, ("mid", "page_id", "ts"))
-    # Exactly the kernel columns, plus eventTime kept for watermarks/timers.
-    assert pruned.columns == ["mid", "page_id", "ts", "eventTime"]
+    for wm_col in ("eventTime", "evt"):
+        watermarked = stream.withColumn(wm_col, F.timestamp_millis(F.col("ts"))).withWatermark(
+            wm_col, "1 second"
+        )
+        pruned = _prune_for_state(watermarked, ("mid", "page_id", "ts"))
+        # Exactly the kernel columns, plus the watermarked column.
+        assert pruned.columns == ["mid", "page_id", "ts", wm_col]
 
-    no_et = _prune_for_state(wide.drop("eventTime"), ("mid", "ts"))
-    assert no_et.columns == ["mid", "ts"]
+    # A timestamp column without a watermark is payload like any other.
+    no_wm = _prune_for_state(wide.withColumn("eventTime", F.timestamp_millis(F.col("ts"))), ("mid", "ts"))
+    assert no_wm.columns == ["mid", "ts"]
 
     # The kernel result must not depend on the pruned payload columns.
     out = {(r.mid, r.ts) for r in detect_bounces_batch(wide).collect()}

@@ -118,8 +118,7 @@ MUST_BE_IN_WINDOW = {
     # rotated-out spec stays oracle-verified every CI run by
     # tests/test_oracle_parity.py. ---
     "active_users_hll", "ann_cosine_topk", "business_rules",
-    "cdc_routing", "dedup_exact", "doc_curation", "doc_fingerprint",
-    "doc_keywords", "doc_split", "dup_clusters",
+    "cdc_routing", "dedup_exact", "doc_fingerprint", "doc_split",
     # --- r15 ROTATION (verdict r14 item 1) — second half of the
     # r9-green cohort pulled back at priority=40, one round before the
     # r16 staleness ratchet fires. Yielding their slots at priority=80:
@@ -131,12 +130,21 @@ MUST_BE_IN_WINDOW = {
     # sales_cube, semantic_clusters, user_sessions — next due r21,
     # beyond the r20 horizon). Every rotated-out spec stays
     # oracle-verified every CI run by tests/test_oracle_parity.py. ---
-    "corpus_profile_approx", "doc_chunks", "embedding_dedup_lsh",
-    "event_anomalies", "events_rollup", "events_rollup_daily",
-    "filtered_ann_indexed", "global_shuffle", "mix_schedule",
+    "corpus_profile_approx", "doc_chunks", "events_rollup_daily",
     "paragraph_dedup", "pii_scrub", "quality_classifier",
-    "quality_gate_threshold", "repetition_stats", "stratified_sample",
+    "quality_gate_threshold", "repetition_stats",
     "substring_dedup", "token_budget", "token_budget_threshold",
+    # --- r17 ROTATION (scripts/rotation_plan.py) — the ten r10-green
+    # specs the staleness ratchet fired on pulled back at priority=40.
+    # Yielding their slots at priority=80: the ten 7-8-green occupants
+    # re-greened r16 (doc_curation, doc_keywords, dup_clusters,
+    # embedding_dedup_lsh, event_anomalies, events_rollup,
+    # filtered_ann_indexed, global_shuffle, mix_schedule,
+    # stratified_sample — next due r23). Every rotated-out spec stays
+    # oracle-verified every CI run by tests/test_oracle_parity.py. ---
+    "json_props", "key_skew", "keyword_stats", "ngram_jaccard",
+    "product_stats", "province_stats", "scalar_datetime", "source_mix",
+    "supplier_volume", "text_quality",
 }
 
 # Pre-r10 window history (kept for the rotation ledger in comments):

@@ -21,10 +21,13 @@ import pytest
 
 from rt_bigdata_spark.streaming.stateful import (
 
+    FUNNEL_EVENT_SCHEMA,
     PAGE_EVENT_SCHEMA,
     correct_is_new,
+    dedup_docs,
     detect_bounces,
     detect_bounces_batch,
+    track_funnel,
     unique_visits,
 )
 
@@ -67,10 +70,9 @@ def _write_batch(dir_: str, name: str, rows: list[dict]) -> None:
     time.sleep(0.05)  # distinct mtimes → deterministic file order
 
 
-@pytest.mark.slow
-def test_bounce_streaming_two_batches(spark, tmp_path):
-    """Real streaming path: batch 1 carries the fixture, batch 2 a later
-    event that advances the watermark past 101's timeout."""
+def _bounce_stream(spark, tmp_path, wm_col: str) -> set:
+    """Real streaming path: batch 1 carries the fixture, later batches
+    advance the watermark (declared on ``wm_col``) past 101's timeout."""
     src = tmp_path / "src"
     src.mkdir()
     chk = str(tmp_path / "chk")
@@ -80,13 +82,13 @@ def test_bounce_streaming_two_batches(spark, tmp_path):
         spark.readStream.schema(PAGE_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
-        .withColumn("eventTime", F.timestamp_millis(F.col("ts")))
-        .withWatermark("eventTime", "1 second")
+        .withColumn(wm_col, F.timestamp_millis(F.col("ts")))
+        .withWatermark(wm_col, "1 second")
     )
     q = (
         detect_bounces(stream)
         .writeStream.format("memory")
-        .queryName("bounces")
+        .queryName(f"bounces_{wm_col}")
         .option("checkpointLocation", chk)
         .outputMode("append")
         .start()
@@ -104,11 +106,26 @@ def test_bounce_streaming_two_batches(spark, tmp_path):
             {"mid": "103", "page_id": "home", "last_page_id": "x", "is_new": "0", "ts": 90000},
         ])
         q.processAllAvailable()
-        out = {(r.mid, r.ts) for r in spark.sql("select * from bounces").collect()}
-        assert ("101", 10000) in out
-        assert all(mid != "102" for mid, _ in out)
+        return {(r.mid, r.ts) for r in spark.sql(f"select * from bounces_{wm_col}").collect()}
     finally:
         q.stop()
+
+
+@pytest.mark.slow
+def test_bounce_streaming_two_batches(spark, tmp_path):
+    out = _bounce_stream(spark, tmp_path, "eventTime")
+    assert ("101", 10000) in out
+    assert all(mid != "102" for mid, _ in out)
+
+
+def test_bounce_streaming_on_any_watermark_column(spark, tmp_path):
+    """The state projection keeps the watermarked column found from the
+    plan, not by the name ``eventTime``: a stream watermarked on ``evt``
+    used to lose it before the stateful operator, and Spark refused the
+    event-time timeout at start()."""
+    out = _bounce_stream(spark, tmp_path, "evt")
+    assert ("101", 10000) in out
+    assert all(mid != "102" for mid, _ in out)
 
 
 def _single_batch_stream(spark, tmp_path, rows, op):
@@ -236,10 +253,6 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
     stages as the batch operator (behavior.funnel_stages) on the same
     events — the streaming/batch equivalence contract."""
     from rt_bigdata_spark.operators.behavior import funnel_stages
-    from rt_bigdata_spark.streaming.stateful import (
-        FUNNEL_EVENT_SCHEMA,
-        track_funnel,
-    )
 
     b1 = [
         {"user_id": 1, "event_type": "view", "ts": 1000},
@@ -295,3 +308,122 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
     # streaming emits only on advance; users stuck at 0 appear in batch only
     assert stream_stages == {u: s for u, s in batch.items() if s > 0}
     assert batch == {1: 3, 2: 1, 3: 1, 4: 2}
+
+
+def test_funnel_abandonment_on_real_stream(spark, tmp_path):
+    """``track_funnel(abandon_timeout_ms=…)`` on a real stream with
+    event-time watermarks: (a) a user advancing TWO stages in one batch
+    gets the deadline of its stage-1 row (fires at 61000, not 110000);
+    (b) after the terminal negative-stage row the partial match is
+    DISCARDED — a later click cannot advance the dead attempt, and a
+    later view starts a FRESH attempt at stage 1."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_batch(str(src), "b1.json", [
+        {"user_id": 7, "event_type": "view", "ts": 1000},
+        {"user_id": 7, "event_type": "click", "ts": 50_000},
+    ])
+    stream = (
+        spark.readStream.schema(FUNNEL_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+        .withColumn("eventTime", F.timestamp_millis(F.col("ts")))
+        .withWatermark("eventTime", "1 second")
+    )
+    q = (
+        track_funnel(stream, abandon_timeout_ms=60_000)
+        .writeStream.format("memory")
+        .queryName("funnel_abandon")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        # an unrelated user far ahead moves the watermark past 61000
+        _write_batch(str(src), "b2.json", [{"user_id": 99, "event_type": "view", "ts": 200_000}])
+        q.processAllAvailable()
+        # post-timeout click must NOT advance the dead attempt
+        _write_batch(str(src), "b3.json", [{"user_id": 7, "event_type": "click", "ts": 290_000}])
+        q.processAllAvailable()
+        # a fresh view restarts a NEW attempt at stage 1
+        _write_batch(str(src), "b4.json", [{"user_id": 7, "event_type": "view", "ts": 300_000}])
+        q.processAllAvailable()
+        rows = {
+            (r.funnel_stage, r.reached_ts)
+            for r in spark.sql("select * from funnel_abandon where user_id = 7").collect()
+        }
+    finally:
+        q.stop()
+    assert rows == {(1, 1000), (2, 50_000), (-2, 61_000), (1, 300_000)}
+
+
+def _docs_stream(spark, src):
+    return spark.readStream.schema("doc_id LONG, text STRING").option("maxFilesPerTrigger", "1").json(str(src))
+
+
+def test_dedup_docs_stream(spark, tmp_path):
+    """First delivery per doc_id passes (smallest text of its batch),
+    in-batch and cross-batch redeliveries drop, on the default state
+    store."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_batch(str(src), "b1.json", [
+        {"doc_id": 1, "text": "a"},
+        {"doc_id": 2, "text": "b-redelivered"},
+        {"doc_id": 2, "text": "b"},
+        {"doc_id": None, "text": "no id"},
+    ])
+    q = (
+        dedup_docs(_docs_stream(spark, src))
+        .writeStream.format("memory")
+        .queryName("dedup_docs")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        _write_batch(str(src), "b2.json", [{"doc_id": 1, "text": "a-replayed"}, {"doc_id": 3, "text": "c"}])
+        q.processAllAvailable()
+        got = sorted((r.doc_id, r.text) for r in spark.sql("select * from dedup_docs").collect())
+    finally:
+        q.stop()
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_dedup_docs_ttl_readmits_after_expiry(spark, tmp_path):
+    """With ``ttl_ms`` the gate runs on processing-time timeouts: a
+    redelivery arriving after the admission's TTL has lapsed is
+    admitted again (the bounded-state trade of the create-and-write
+    TTL). Such a query runs a micro-batch on every trigger to sweep
+    timeouts, so it is driven by a trigger interval and polled —
+    ``processAllAvailable`` would never see the stream idle."""
+    src = tmp_path / "src"
+    src.mkdir()
+    got: list[tuple] = []
+
+    def collect(batch_df, batch_id: int) -> None:
+        got.extend((r.doc_id, r.text) for r in batch_df.collect())
+
+    def wait_for(n: int) -> None:
+        deadline = time.monotonic() + 120
+        while len(got) < n and time.monotonic() < deadline:
+            time.sleep(0.2)
+
+    q = (
+        dedup_docs(_docs_stream(spark, src), ttl_ms=1_000)
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        _write_batch(str(src), "b1.json", [{"doc_id": 1, "text": "a"}])
+        wait_for(1)
+        time.sleep(1.5)
+        _write_batch(str(src), "b2.json", [{"doc_id": 1, "text": "a"}])
+        wait_for(2)
+    finally:
+        q.stop()
+    assert got == [(1, "a"), (1, "a")]
