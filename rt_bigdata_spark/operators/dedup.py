@@ -82,113 +82,16 @@ def shingle_explode(
     CollapseProject keeps the staging boundary because ``_toks`` is
     consumed more than once by non-cheap expressions (size + the
     slice lambda), so tokenize runs once per row instead of once per
-    gram — see ``_shingles_of_tokens`` for the measurement.
-
-    With ``SPARK_GRAFT_ARROW_SHINGLES=1`` the n-gram construction runs
-    as a vectorized ``mapInArrow`` batch kernel instead of the
-    interpreted JVM HOF chain (guide §4.2) — measured 1.9× faster on a
-    10× corpus where CPU dominates scheduling, byte-identical output
-    (xxhash64 checksum over every (id, shingle) row at two SFs).
-    Tokenize (lower + regex-split + filter) STAYS in the JVM either
-    way, so no string transformation that could diverge between
-    utf8proc/RE2 and the JVM (measured: U+0130, Greek final sigma
-    under ``utf8_lower``) ever runs in Python; the kernel only joins
-    and dedups JVM-produced token bytes. Emission order within a doc
-    differs (dictionary order, not first-occurrence) — the row SET is
-    identical, and every consumer aggregates order-insensitively.
-    Default off: at bench scale (sf0.1) the paired delta is flat and
-    the Arrow boundary costs Python-worker spawn on a cold run; flip
-    it on for CPU-dense corpora (real document lengths, 100 TB)."""
-    import os
-
+    gram — see ``_shingles_of_tokens`` for the measurement."""
     kept = [F.col(c) if isinstance(c, str) else c for c in keep]
     staged = df.select(
         *kept, tokenize(F.coalesce(F.col(text_col), F.lit(""))).alias("_toks")
     )
     names = [f.name for f in staged.schema.fields[:-1]]
-    if os.environ.get("SPARK_GRAFT_ARROW_SHINGLES", "0") == "1":
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        out_schema = StructType(
-            [*staged.schema.fields[:-1], StructField(alias, StringType(), False)]
-        )
-        return staged.mapInArrow(
-            _arrow_shingle_batches(n, [*names, alias]), out_schema
-        )
     return staged.select(
         *[F.col(c) for c in names],
         F.explode(_shingles_of_tokens(F.col("_toks"), n)).alias(alias),
     )
-
-
-def _arrow_shingle_batches(n: int, out_names: "list[str]"):
-    """mapInArrow kernel factory for ``shingle_explode``'s Arrow path:
-    per-row distinct word n-grams over a JVM-tokenized ``_toks``
-    list<string> column (the batch's LAST column; kept columns ride
-    along and are re-attached by ``take``). Fully vectorized — offset
-    arithmetic, element-wise byte joins, dictionary-encode + one
-    lexsort for the per-row dedup; zero per-row Python. Clamp
-    semantics match ``word_shingles``: rows with fewer than ``n``
-    tokens emit their full token join (``''`` for empty docs)."""
-
-    def fn(it):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in it:
-            toks = batch.column(batch.num_columns - 1)
-            offs = np.asarray(toks.offsets)
-            f = toks.flatten()
-            noffs = offs - offs[0]
-            n_tok = np.diff(noffs)
-            n_rows = len(n_tok)
-            nf = len(f)
-            out_rows: "list[np.ndarray]" = []
-            out_grams: "list[pa.Array]" = []
-            n_full = nf - (n - 1)
-            if n_full > 0:
-                grams = pc.binary_join_element_wise(
-                    *(f.slice(i, n_full) for i in range(n)), " "
-                )
-                row_of = np.repeat(np.arange(n_rows), n_tok)
-                valid = row_of[:n_full] == row_of[n - 1 : nf]
-                gram_rows = row_of[:n_full][valid]
-                gv = grams.filter(pa.array(valid))
-                codes = pc.dictionary_encode(gv).indices.to_numpy(
-                    zero_copy_only=False
-                )
-                if len(codes):
-                    order = np.lexsort((codes, gram_rows))
-                    r_s, c_s = gram_rows[order], codes[order]
-                    first = np.concatenate(
-                        ([True], (r_s[1:] != r_s[:-1]) | (c_s[1:] != c_s[:-1]))
-                    )
-                    out_rows.append(r_s[first])
-                    out_grams.append(gv.take(pa.array(order[first])))
-            clamped = np.nonzero(n_tok < n)[0]
-            if len(clamped):
-                joined = pc.binary_join(
-                    pa.ListArray.from_arrays(pa.array(noffs, pa.int32()), f),
-                    pa.scalar(" "),
-                )
-                out_rows.append(clamped)
-                out_grams.append(joined.take(pa.array(clamped)))
-            rows = pa.array(
-                np.concatenate(out_rows) if out_rows else np.zeros(0, np.int64)
-            )
-            gcol = (
-                pa.concat_arrays([a.cast(pa.string()) for a in out_grams])
-                if out_grams
-                else pa.array([], pa.string())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i).take(rows) for i in range(batch.num_columns - 1)]
-                + [gcol],
-                out_names,
-            )
-
-    return fn
 
 
 def _shingle_hash(shingle: Column) -> Column:

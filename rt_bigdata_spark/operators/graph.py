@@ -6,93 +6,53 @@ connected near-dups. Connected components is the canonical iterative
 Spark workload: no single-pass SQL expresses it, but a short loop of
 joins does, with the driver controlling convergence.
 
-Scale design (100 TB): min-label propagation converges in O(diameter)
-rounds; near-dup graphs have tiny diameters (clusters are cliques-ish),
-so 2-4 rounds dominate in practice. Each round is one join + one
-aggregate, both partitioned by node id — AQE coalesces the tail.
-Every round's frontier is localCheckpoint'ed: persist does NOT
+``connected_components`` is the one entry point and picks one of two
+paths by the measured edge count. At most ``_CC_DRIVER_EDGE_CAP``
+directed edges (the common near-dup case at every scale) are collected
+once over Arrow and labeled on the driver by ``_cc_numpy_labels``.
+Larger edge sets run alternating large-star/small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14), whose round count is O(log² n) whatever the component
+diameter. The loop stops only when its edge set is a star forest, so
+it cannot return unconverged labels; it raises when ``max_iter`` runs
+out. Every round's edge set is localCheckpoint'ed: persist does NOT
 truncate lineage, and an untruncated iterative plan doubles per round
 until the driver dies building plan strings (measured on an 11-round
-path graph). For adversarial diameters use
-``connected_components_two_phase`` (alternating large-star/small-star,
-Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14), which bounds rounds by O(log² n) independent of diameter.
+path graph).
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 # connected_components collects the (deduplicated, symmetrized) edge set
 # and labels it driver-locally when it has at most this many directed
-# rows (env override SPARK_GRAFT_CC_DRIVER_EDGES). The collect rides
-# Arrow (``toArrow``, r16 — a 2.4 M-row probe collects in ~0.5 s where
-# row-collect took tens of seconds) and integer graphs are labeled with
-# a VECTORIZED numpy min-label/pointer-jumping pass, so the cap sits at
-# 4 M directed rows × 16 B ≈ 64 MB — still the bounded-model-collect
-# class (far under spark.driver.maxResultSize), but wide enough that a
-# 10× near-dup-clique replica (2.4 M directed edges, measured r16) stays
-# on the driver path. Above the cap the iterative min-label loop below
-# runs unchanged (the 100 TB path, where edge sets are billions of
-# rows). The near-dup graphs this operator post-processes are SMALL by
+# rows. The collect rides Arrow (``toArrow`` — a 2.4 M-row probe
+# collects in ~0.5 s where row-collect took tens of seconds) and the
+# labeling is a VECTORIZED numpy min-label/pointer-jumping pass, so the
+# cap sits at 4 M directed rows × 16 B ≈ 64 MB — still the
+# bounded-model-collect class (far under spark.driver.maxResultSize),
+# but wide enough that a 10× near-dup-clique replica (2.4 M directed
+# edges) stays on the driver path. Above the cap the star-contraction
+# loop runs (the 100 TB path, where edge sets are billions of rows).
+# The near-dup graphs this operator post-processes are SMALL by
 # construction — dedup pair discovery emits a fraction of the corpus —
 # so the small-graph case is the common one at every scale; the cap is
 # what keeps the driver safe when it is not.
-_CC_DRIVER_EDGE_CAP = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(4 * 1024 * 1024)))
-
-
-def _cc_union_find_local(
-    edges: "list[tuple[int, int]]",
-) -> "list[tuple[int, int]]":
-    """Label every edge-touched node with the smallest node id reachable
-    from it, driver-locally: classic union-find with path compression +
-    union by size, min-id tracked per root. Output (node, label) rows —
-    bit-identical to the distributed min-label loop's fixpoint (both
-    compute the same function: min node id of the connected component;
-    property-tested against the forced distributed path in
-    tests/test_graph_sampling.py)."""
-    parent: dict = {}
-    size: dict = {}
-    least: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edges:
-        for n in (a, b):
-            if n not in parent:
-                parent[n] = n
-                size[n] = 1
-                least[n] = n
-        ra, rb = find(a), find(b)
-        if ra == rb:
-            continue
-        if size[ra] < size[rb]:
-            ra, rb = rb, ra
-        parent[rb] = ra
-        size[ra] += size[rb]
-        least[ra] = min(least[ra], least[rb])
-    return [(n, least[find(n)]) for n in parent]
+_CC_DRIVER_EDGE_CAP = 4 * 1024 * 1024
 
 
 def _cc_numpy_labels(src, dst):
-    """Vectorized driver-local CC over integer edge arrays: min-label
-    relaxation + pointer jumping (Shiloach-Vishkin shape) on numpy
-    index arrays — O((E+N) · log n) with no per-edge Python. Returns
-    (unique node ids ascending, per-node min-reachable-id labels).
-    Same function as ``_cc_union_find_local`` (min node id of the
-    component — labels are monotone non-increasing and bounded, so the
-    relax/jump loop reaches the unique fixpoint where every edge's
-    endpoints agree); equality is property-tested against both the
-    union-find and the distributed loop."""
+    """Vectorized driver-local CC over edge arrays of any orderable id
+    type (``np.unique`` ranks the ids; the loop runs on their integer
+    ranks): min-label relaxation + pointer jumping (Shiloach-Vishkin
+    shape) on numpy index arrays — O((E+N) · log n) with no per-edge
+    Python. Returns (unique node ids ascending, per-node
+    min-reachable-id labels). Labels are monotone non-increasing and
+    bounded, so the relax/jump loop reaches the unique fixpoint where
+    every edge's endpoints agree; equality with a union-find reference
+    and with the distributed loop is property-tested."""
     import numpy as np
 
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
@@ -120,7 +80,7 @@ def connected_components(
     id_col: str = "id",
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Label every node with the smallest node id reachable from it
     (undirected reachability): output ``(node, label)``; nodes in the
@@ -130,104 +90,62 @@ def connected_components(
     results are oracle-comparable; the DuckDB equivalent is a recursive
     CTE over the symmetrized edge set.
 
-    The iteration runs over the ACTIVE subgraph only — nodes that
-    appear in at least one edge. A node with no edges can never change
-    its label, so looping it through every round is pure waste; after a
+    Labeling runs over the edge-touched nodes only; a node with no
+    edges gets its self-label in the single final left join. After a
     near-dup pair discovery the edge-touched set is a small fraction of
-    the corpus (the whole point of dedup is that most docs are unique),
-    which shrinks every per-round shuffle from |corpus| to |near-dup
-    subgraph|. Singletons get their self-label in the single final
-    left join.
+    the corpus (most docs are unique).
 
-    SCALE-ADAPTIVE (r15): an edge set at most ``_CC_DRIVER_EDGE_CAP``
-    directed rows is collected once and labeled with a driver-local
-    union-find (``_cc_union_find_local``) — identical labels, 2 jobs
-    instead of ~2 per propagation round; larger graphs run the
-    distributed loop. Equality pinned in
-    tests/test_graph_sampling.py::test_driver_union_find_equals_distributed_loop.
+    SCALE-ADAPTIVE: an edge set of at most ``_CC_DRIVER_EDGE_CAP``
+    directed rows is collected once and labeled on the driver
+    (``_cc_numpy_labels``) — 2 jobs in total. A larger one runs
+    large-star/small-star contraction, one materializing action per
+    round, until the edge set is a star forest; if that takes more than
+    ``max_iter`` rounds it raises ``RuntimeError`` instead of returning
+    labels. Equality of the two paths is pinned in
+    tests/test_graph_sampling.py::test_driver_labels_equal_distributed_loop.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # localCheckpoint on every iterative frontier: persist alone does
-    # NOT truncate lineage, so after ~10 rounds the logical plan
-    # (labels referenced by the join AND the convergence check each
-    # round) grows until the driver OOMs building plan strings.
-    # Truncation per round is the standard iterative-Spark requirement;
-    # on a cluster prefer reliable `checkpoint()` to keep executor-loss
+    # localCheckpoint computes the edge set once for both the probe
+    # collect and the star loop's first round, and truncates lineage.
+    # On a cluster prefer reliable `checkpoint()` to keep executor-loss
     # recovery.
     e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().localCheckpoint()
-    # Scale-adaptive labeling (r15, guide §1.2/§5): small graphs (the
-    # common near-dup case: pair discovery emits a fraction of the
-    # corpus) collect ONCE and label with a driver-local union-find —
-    # identical labels. Large graphs run the distributed loop below
-    # unchanged. Sizing and collecting are ONE job (r15 session 4):
-    # ``limit(cap+1).collect()`` over the checkpointed blocks returns
-    # ≤ cap rows iff the edge set fits (then those rows ARE the whole
-    # set), and cap+1 rows iff it does not (discard, take the
-    # distributed path) — the separate count() job the first cut paid
-    # per consumer query is folded away. The collect stays bounded at
+    # Sizing and collecting are ONE job: ``limit(cap+1)`` over the
+    # checkpointed blocks returns ≤ cap rows iff the edge set fits (then
+    # those rows ARE the whole set), and cap+1 rows iff it does not
+    # (discard, take the distributed path). The collect stays bounded at
     # cap+1 rows by construction.
-    # Arrow collect (r16): row-collect serialized every edge through
-    # py4j pickle rows; ``toArrow`` ships the same ≤ cap+1 rows as a
-    # few columnar batches (measured 2.4 M rows: ~0.5 s vs ~20 s).
     probe_tbl = e.limit(_CC_DRIVER_EDGE_CAP + 1).toArrow()
     if probe_tbl.num_rows <= _CC_DRIVER_EDGE_CAP:
-        spark = nodes.sparkSession
-        label_type = e.schema["a"].dataType
-        from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+        import pyarrow as pa
 
-        schema = StructType(
-            [StructField("node", label_type, True), StructField("label", label_type, True)]
+        ids, labs = _cc_numpy_labels(
+            probe_tbl.column("a").to_numpy(zero_copy_only=False),
+            probe_tbl.column("b").to_numpy(zero_copy_only=False),
         )
-        if probe_tbl.num_rows and isinstance(label_type, (IntegerType, LongType)):
-            # vectorized numpy labeling + Arrow-native round trip for
-            # integer ids (every dedup consumer — md5-derived longs)
-            import pyarrow as pa
-
-            src = probe_tbl.column("a").to_numpy(zero_copy_only=False)
-            dst = probe_tbl.column("b").to_numpy(zero_copy_only=False)
-            ids, labs = _cc_numpy_labels(src, dst)
-            arrow_type = pa.int32() if isinstance(label_type, IntegerType) else pa.int64()
-            labels_df = spark.createDataFrame(
-                pa.table(
-                    {
-                        "node": pa.array(ids, arrow_type),
-                        "label": pa.array(labs, arrow_type),
-                    }
-                )
-            )
+        id_type = probe_tbl.schema.field("a").type
+        labels = nodes.sparkSession.createDataFrame(
+            pa.table({"node": pa.array(ids, id_type), "label": pa.array(labs, id_type)})
+        )
+    else:
+        # Star contraction: both star operations preserve connectivity
+        # (Kiveris et al.), so once the edge set is a star forest each
+        # star is one component rooted at its smallest id.
+        e = e.filter(F.col("a") != F.col("b")).select(F.col("a").alias("u"), F.col("b").alias("v"))
+        for _ in range(max_iter):
+            # large-star needs both directions of the current edge set
+            sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+            # one action per round: the star-forest count materializes
+            # the lazily-marked checkpoint (full scan → every partition
+            # persists; the next round reuses the blocks)
+            e = _star_edges(_star_edges(sym, large=True), large=False).localCheckpoint(eager=False)
+            if _star_forest_violations(e) == 0:
+                break
         else:
-            rows = probe_tbl.to_pylist()
-            labeled = _cc_union_find_local([(r["a"], r["b"]) for r in rows])
-            labels_df = spark.createDataFrame(labeled, schema)
-        out = nodes.select(F.col(id_col).alias("node")).join(labels_df, "node", "left")
-        return out.select("node", F.coalesce("label", "node").alias("label"))
-    # Symmetrized, so the a-side alone covers every edge-touched node.
-    labels = e.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
-        # Each node receives its neighbors' current labels; its OWN
-        # current label rides along tagged in ``_old`` (neigh rows
-        # carry NULL there), so the min-agg yields the new label AND
-        # the previous one in the same pass — the convergence check
-        # needs no second join.
-        neigh = e.join(labels, e["b"] == labels["node"]).select(
-            F.col("a").alias("node"), F.col("label"), F.lit(None).cast(labels.schema["label"].dataType).alias("_old")
-        )
-        own = labels.select("node", "label", F.col("label").alias("_old"))
-        # ONE Spark job per round (r6 verdict item 6): the lazy
-        # localCheckpoint is materialized by the changed-count action
-        # itself (a full aggregate, so every partition persists), and
-        # the next round's join reuses the persisted blocks — the
-        # eager-checkpoint + count pattern ran two jobs per round.
-        new_labels = (
-            own.unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("label") != F.col("_old")).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
+            raise RuntimeError(
+                f"connected_components: star contraction did not converge in {max_iter} rounds"
+            )
+        labels = e.select(F.col("u").alias("node"), F.col("v").alias("label"))
     out = nodes.select(F.col(id_col).alias("node")).join(labels, "node", "left")
     return out.select("node", F.coalesce("label", "node").alias("label"))
 
@@ -257,61 +175,23 @@ def _star_edges(e: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components_two_phase(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components — the
-    adversarial-diameter variant promised by ``connected_components``:
-    rounds bounded O(log² n) regardless of component diameter (a path
-    graph collapses in a few alternations where min-label propagation
-    needs diameter rounds). Same output contract: ``(node, label)``
-    with label = smallest node id in the component.
-
-    Per round: two groupBy-explode passes over the shrinking edge set.
-    Convergence = small-star output unchanged (checked via an
-    order-insensitive count+hash aggregate — one tiny action per
-    round); ``max_iter`` caps adversarial inputs.
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # localCheckpoint (not persist): each round references the previous
-    # edge set TWICE (symmetrize union), so without lineage truncation
-    # the logical plan doubles per round and the driver OOMs building
-    # plan strings long before the data is large. Truncation per round
-    # is the standard iterative-Spark requirement; at cluster scale use
-    # reliable `checkpoint()` on a durable dir instead (localCheckpoint
-    # trades executor-loss recovery for speed).
-    e = e.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
-
-    def fingerprint(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("ct"), F.sum(F.hash("u", "v").cast("long")).alias("hs")
-        ).first()
-        return (row["ct"], row["hs"])
-
-    prev_fp = None
-    for _ in range(max_iter):
-        # large-star needs both directions of the current edge set
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-        e2 = _star_edges(sym, large=True)
-        # one job per round: the fingerprint aggregate materializes the
-        # lazily-marked checkpoint (full scan → every partition
-        # persists; next round reuses the blocks)
-        e = _star_edges(e2, large=False).localCheckpoint(eager=False)
-        fp = fingerprint(e)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    # converged edge set is a star forest: every edge is (node, root)
-    labels = nodes.select(F.col(id_col).alias("node")).join(
-        e.select(F.col("u").alias("node"), F.col("v").alias("label")), "node", "left"
+def _star_forest_violations(e: DataFrame) -> int:
+    """Count the nodes of edge set ``e`` (u, v) that break the star
+    forest shape: an edge that does not point at a smaller id, or a
+    node with an out-edge that has any other edge (a second out-edge,
+    or an in-edge, so its target is not a root). Zero means every
+    component is one star whose root is its smallest id."""
+    ends = e.select(
+        F.col("u").alias("n"),
+        F.lit(1).alias("out"),
+        (F.col("v") >= F.col("u")).cast("int").alias("up"),
+    ).unionByName(e.select(F.col("v").alias("n"), F.lit(0).alias("out"), F.lit(0).alias("up")))
+    per_node = ends.groupBy("n").agg(
+        F.sum("out").alias("out"), F.count(F.lit(1)).alias("deg"), F.max("up").alias("up")
     )
-    return labels.select("node", F.coalesce("label", "node").alias("label"))
+    return per_node.filter(
+        ((F.col("out") >= 1) & (F.col("deg") > 1)) | (F.col("up") == 1)
+    ).count()
 
 
 def cluster_representatives(

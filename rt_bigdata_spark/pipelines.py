@@ -15,7 +15,7 @@ evidence first so each stage shrinks the next stage's input:
 7. near-dup: MinHash-LSH pairs → connected components →
    QUALITY-AWARE keeper (the classifier margin from stage 2 decides
    which copy survives)                      — minhash_lsh_pairs /
-   connected_components_two_phase / cluster_representatives
+   connected_components / cluster_representatives
 8. per-source token budget (1 window)        — token_budget_sample
 9. training order: temperature-weighted source interleave
    (counts agg + the bucketed rank kernel)   — temperature_mix
@@ -44,7 +44,7 @@ from rt_bigdata_spark.operators.curation_rules import (
 from rt_bigdata_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
 from rt_bigdata_spark.operators.graph import (
     cluster_representatives,
-    connected_components_two_phase,
+    connected_components,
 )
 from rt_bigdata_spark.operators.packing import export_shards, token_budget_sample
 from rt_bigdata_spark.operators.sampling import temperature_mix
@@ -147,11 +147,10 @@ def curate_training_corpus(
     pairs = minhash_lsh_pairs(exact_ok, threshold=near_dup_threshold).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    # two-phase (large-star/small-star) CC: O(log² n) rounds regardless
-    # of component diameter — min-label propagation's fixed iteration
-    # cap would silently split a >cap-diameter boilerplate chain into
-    # several labels and let extra copies survive
-    labeled = connected_components_two_phase(
+    # a long boilerplate chain must stay ONE cluster: both CC paths
+    # label it exactly (the distributed one raises rather than return
+    # unconverged labels), so no extra copy survives
+    labeled = connected_components(
         exact_ok.select("doc_id"), pairs, id_col="doc_id"
     )
     margins = scored.select(

@@ -1124,10 +1124,11 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: the post-processing step every dedup
     pipeline needs after pair discovery — transitively connect the
     Jaccard ≥ 0.1 pairs and label each doc with its component's
-    smallest doc_id (the canonical keeper). Iterative min-label
-    propagation (operators/graph.py); the oracle is a DuckDB recursive
-    CTE over the same pair set, making this one of the few iterative
-    Spark workloads with an exact SQL cross-check.
+    smallest doc_id (the canonical keeper). graph.connected_components
+    labels the pair graph (driver-local below its edge cap, star
+    contraction above it); the oracle is a DuckDB recursive CTE over
+    the same pair set, making this one of the few iterative Spark
+    workloads with an exact SQL cross-check.
     """
     return _cluster_labels(spark, sf_dir).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster")
@@ -1182,23 +1183,19 @@ _CC2_NODES = 400  # 4 path segments of 100 nodes; cross edges pair them up
 
 
 def q_cc_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ADVERSARIAL-DIAMETER connected-components fallback
-    (graph.connected_components_two_phase — alternating large-star/
-    small-star, Kiveris et al. SoCC'14) driver-verified on the graph
-    shape it exists for (r14 verdict item 8): a forced-diameter fixture
-    built deterministically from the documents table — four 100-node
-    PATHS (edges i→i+1 within each 100-id segment, doc_id < 400) plus
-    two cross edges (50→250, 150→350) merging them into two components
-    of ~200 diameter each. Min-label propagation would need ~200
-    rounds here and its default max_iter would return WRONG labels;
-    the star alternation collapses the paths in O(log² n) rounds —
-    this row pins that the fallback actually labels such graphs
-    correctly, per the documented switch rule (SCALE.md: switch to
-    two-phase when diameter is unknown/adversarial). Oracle = an
-    INDEPENDENT DuckDB recursive-CTE reachability over the same edge
-    construction — full transitive closure, no star algebra shared
-    with the implementation."""
-    from rt_bigdata_spark.operators.graph import connected_components_two_phase
+    """Connected components on the adversarial-diameter graph shape
+    (graph.connected_components): a forced-diameter fixture built
+    deterministically from the documents table — four 100-node PATHS
+    (edges i→i+1 within each 100-id segment, doc_id < 400) plus two
+    cross edges (50→250, 150→350) merging them into two components of
+    ~200 diameter each, where per-hop label propagation would need
+    ~200 rounds. At this size the fixture labels on the driver path;
+    tests/test_graph_sampling.py runs a long path through the
+    distributed star contraction, whose rounds are O(log² n) regardless
+    of diameter. Oracle = an INDEPENDENT DuckDB recursive-CTE
+    reachability over the same edge construction — full transitive
+    closure, no algorithm shared with the implementation."""
+    from rt_bigdata_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _CC2_NODES)
     nodes = docs.select(F.col("doc_id").alias("id"))
@@ -1211,7 +1208,7 @@ def q_cc_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dst") < _CC2_NODES)
     )
     edges = path.unionByName(cross)
-    return connected_components_two_phase(nodes, edges).select("node", "label")
+    return connected_components(nodes, edges).select("node", "label")
 
 
 _ORACLE_CC_TWO_PHASE = f"""

@@ -62,7 +62,7 @@ FLAGSHIPS = {
     "winnow_fingerprint": "MOSS winnowing with STAGED array materialization (r12): grams and window-min fps are real columns between projections, so the interpreted HOF lambdas evaluate each array once per row — the expression-inlined form paid O(n_grams²) md5s per doc ×3 consumers (32.5 s → 1.3 s at sf0.1). Zero exchanges: everything sits inside the scan projection chain.",
     "similar_users": "behavioral Pearson top-k: ONE (user, bucket) hash-agg over the events scan (map-side combinable), the 1-row global span and the probes×buckets matrix travel by broadcast, scoring is a bucket equi-join + per-probe top-k window; cross products cast to DOUBLE before multiplying (r15 — int64 wraps at ~1e9 per-user events) so the plan is overflow-safe at scale with zero extra exchanges.",
     "media_wav_decode": "the real-codec driver row: WAV muxing is a whole-stage-codegen binary concat (constant 44-byte header literal + unhex(md5) payload) over a scan pruned to (doc_id, text); the stdlib-wave decode runs in ONE ArrowEvalPython (mapInPandas) stage over the pre-pruned 3-column frame — no shuffle anywhere, output is O(rows).",
-    "cc_two_phase": "alternating large-star/small-star CC: per round two groupBy-explode passes over the SHRINKING edge set with localCheckpoint lineage truncation (plan depth constant in rounds); the final labeling is one left join of the 400-node frame against the converged star forest — rounds O(log² n) regardless of component diameter, where min-label's plan would need diameter rounds.",
+    "cc_two_phase": "connected_components on the 400-node forced-diameter fixture (~800 directed edges, under the driver edge cap): one Arrow probe-collect of the symmetrized, checkpointed edge set, driver-local numpy labeling, then one left join of the 400-node frame against the labels — the plan holds no per-round work; above the cap the same call runs large-star/small-star rounds until the edge set is a star forest.",
     "semdedup": "SemDeDup with the r12 exact-dup collapse: one groupBy on the raw vector (min-id rep + member-id list), rep-level cluster-local pairwise over hoisted (_vd, _nrm) columns, verdicts fanned back by explode — flat in duplication factor (30× probe: 271.6 s naive → 5.6 s). Cell key is NON-NULLABLE (kills the isnotnull filter re-inline) and the pair join sits on a numbered repartition(cell) so AQE cannot coalesce the quadratic stage to one task.",
     "sq8_ann_topk": "SQ8 asymmetric search: the per-dim min/max model reduces partial→final to ONE row broadcast over a second scan; encode and on-the-fly dequant are transform lambdas inside the scan projection; the 5-row query set broadcasts and the only Exchange is the per-query top-k window — byte codes, never raw vectors, feed the scorer.",
     "bloom_contamination": "Bloom decontamination audit: probe grams hash to ≤m distinct set-bit rows (broadcast BY CONSTRUCTION); the corpus-side shingle explode ×k salts probes them via BroadcastHashJoin; the exact arm's gram equi-join rides beside it; three output-sized aggs close the plan — no corpus-scale exchange beyond the per-doc counts.",

@@ -1,22 +1,19 @@
 """100× driver-loop probe for the iterative family (r13 verdict item 7).
 
-``dup_clusters`` (connected components), ``semantic_clusters``
-(Lloyd k-means), ``bpe_merges`` (merge induction), and ``pq_train``
-(per-subspace Lloyd) are DRIVER-CONTROLLED loops: each round launches
-Spark jobs and the driver holds the loop state. The 30× probes in
-SCALE.md measured end-to-end totals; the 100× risk they cannot see is
-PER-ROUND FIXED OVERHEAD — if per-round cost grows with the round
-index (lineage accretion, plan-string blowup, growing literal tables),
-a 100-TB run with the same round count dies even though the 1× total
-looked linear.
+``semantic_clusters`` (Lloyd k-means), ``bpe_merges`` (merge
+induction), and ``pq_train`` (per-subspace Lloyd) are
+DRIVER-CONTROLLED loops: each round launches Spark jobs and the driver
+holds the loop state. The 30× probes in SCALE.md measured end-to-end
+totals; the 100× risk they cannot see is PER-ROUND FIXED OVERHEAD — if
+per-round cost grows with the round index (lineage accretion,
+plan-string blowup, growing literal tables), a 100-TB run with the same
+round count dies even though the 1× total looked linear.
 
 This probe measures per-round cost DIRECTLY, with zero engine change:
 run each loop at increasing round budgets and difference successive
-totals — flat diffs ⇒ the localCheckpoint lineage truncation works and
-round N costs what round 1 did. For CC, a synthetic 16-node path graph
-is unioned onto the replica's near-dup edges to force ~15 label-
-propagation rounds (real dup cliques converge in 2-4, too few to see
-accretion).
+totals — flat diffs ⇒ round N costs what round 1 did. Connected
+components is not probed here: its round count is set by convergence,
+and it raises rather than stop early at a truncated budget.
 
     python scripts/iterative_probe.py [--factor 100] [--skip-build]
 
@@ -33,8 +30,6 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-
-import pyspark.sql.functions as F  # noqa: E402
 
 
 def _timed(fn) -> float:
@@ -54,8 +49,6 @@ def main() -> None:
     from scripts.scale_probe import build  # noqa: E402
 
     from rt_bigdata_spark.operators.clustering import kmeans_lloyd
-    from rt_bigdata_spark.operators.dedup import minhash_lsh_pairs
-    from rt_bigdata_spark.operators.graph import connected_components
     from rt_bigdata_spark.operators.quantization import pq_train
     from rt_bigdata_spark.operators.text_analysis import bpe_merges
     from rt_bigdata_spark.session import get_spark
@@ -71,41 +64,6 @@ def main() -> None:
     emb = load_table(spark, args.out, "embeddings")
     n_docs, n_vecs = docs.count(), emb.count()
     result: dict = {"factor": args.factor, "n_docs": n_docs, "n_vecs": n_vecs}
-
-    # --- connected components: per-round cost over a forced-depth graph
-    # (replica near-dup edges ∪ one 16-node path on synthetic ids).
-    # SPANNING pairs, not the full pair set: at dup-heavy 100× the full
-    # form is quadratic in clique size (~25M pairs from 5k cliques of
-    # 100 — the r12 cliff the r13 spanning form closed; feeding CC the
-    # full set OOM'd an 8g heap right here on the first probe run) and
-    # CC components are IDENTICAL over the spanning subset
-    # (property-tested). This is the production composition at scale. --
-    pairs = minhash_lsh_pairs(docs, max_pairs_per_group=8).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    base = int(docs.agg(F.max("doc_id")).first()[0]) + 1
-    path_edges = spark.createDataFrame(
-        [(base + i, base + i + 1) for i in range(15)], "src: long, dst: long"
-    )
-    edges = pairs.unionByName(path_edges).localCheckpoint()
-    edges.count()  # materialize once so every budget run sees the same input
-    nodes = docs.select(F.col("doc_id").alias("id")).unionByName(
-        spark.range(base, base + 16).select(F.col("id"))
-    )
-    cc_rounds: dict[str, float] = {}
-    prev = None
-    for budget in (1, 3, 5, 8, 11, 15):
-        t = _timed(lambda b=budget: connected_components(nodes, edges, max_iter=b)
-                   .write.format("noop").mode("overwrite").save())
-        if prev is not None:
-            span = budget - prev[0]
-            cc_rounds[f"rounds_{prev[0]+1}-{budget}_per_round"] = round(
-                (t - prev[1]) / span, 3
-            )
-        else:
-            cc_rounds["rounds_1_total"] = t
-        prev = (budget, t)
-    result["connected_components"] = cc_rounds
 
     # --- k-means Lloyd: per-iteration diff over 100× vectors ----------
     km: dict[str, float] = {}

@@ -826,33 +826,3 @@ def test_shingle_explode_equals_naive_and_stages_tokenize_once(spark):
 
     plan = staged._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(lower(") == 1, plan
-
-
-def test_shingle_explode_arrow_path_equals_jvm(spark, monkeypatch):
-    """r16 Arrow adoption (guide §4.2): the ``SPARK_GRAFT_ARROW_SHINGLES=1``
-    mapInArrow kernel must emit exactly the JVM explode's row SET —
-    clamped short docs, NULL docs, duplicate-shingle dedup, unicode
-    text and n=8 contamination grams included. Tokenize stays JVM-side
-    on both paths, so this pins only the byte-join/dedup kernel."""
-    from rt_bigdata_spark.operators.dedup import shingle_explode
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog and more words here", "s0"),
-        (2, None, "s1"),
-        (3, "", "s0"),
-        (4, "one two", "s1"),
-        (5, "a b a b a b a b a b a b", "s0"),
-        (6, "İstanbul ΣΙΣΥΦΟΣ 中文分词 café ｄｅｆ", "s1"),
-        (7, "x", "s0"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string, source: string")
-
-    for n in (3, 8):
-        monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLES", raising=False)
-        jvm = sorted(
-            map(tuple, shingle_explode(df, "text", n=n, keep=["doc_id", "source"]).collect())
-        )
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLES", "1")
-        arrow_df = shingle_explode(df, "text", n=n, keep=["doc_id", "source"])
-        assert "MapInArrow" in arrow_df._jdf.queryExecution().executedPlan().toString()
-        assert sorted(map(tuple, arrow_df.collect())) == jvm

@@ -21,8 +21,9 @@ pytestmark = pytest.mark.slow
 
 
 def _cc(spark, node_ids, edge_pairs, **kw):
-    nodes = spark.createDataFrame([(n,) for n in node_ids], "id long")
-    edges = spark.createDataFrame(edge_pairs or [(None, None)], "src long, dst long")
+    t = "string" if isinstance(node_ids[0], str) else "long"
+    nodes = spark.createDataFrame([(n,) for n in node_ids], f"id {t}")
+    edges = spark.createDataFrame(edge_pairs or [(None, None)], f"src {t}, dst {t}")
     if not edge_pairs:
         edges = edges.filter(F.lit(False))
     out = connected_components(nodes, edges, **kw)
@@ -107,52 +108,6 @@ def test_weighted_sample_rate_one_keeps_all_rate_zero_drops_all(spark):
     assert weighted_sample(df, "text", "grp", {"g": 0.0}).count() == 0
 
 
-# --- large-star/small-star variant: equivalence with min-label ---
-
-
-def test_two_phase_matches_min_label_on_fixed_graphs(spark):
-    from rt_bigdata_spark.operators.graph import connected_components_two_phase
-
-    cases = [
-        ([1, 2, 3, 4, 5], [(2, 1), (2, 3), (4, 3), (4, 5)]),  # path graph
-        ([1, 2, 3, 10, 11, 99], [(1, 2), (2, 3), (10, 11)]),
-        ([7, 8], []),
-        (list(range(1, 13)), [(i, i + 1) for i in range(1, 12)]),  # longer path
-    ]
-    for node_ids, edge_pairs in cases:
-        expect = _cc(spark, node_ids, edge_pairs)
-        nodes = spark.createDataFrame([(n,) for n in node_ids], "id long")
-        edges = spark.createDataFrame(edge_pairs or [(None, None)], "src long, dst long")
-        if not edge_pairs:
-            edges = edges.filter(F.lit(False))
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_two_phase(nodes, edges).collect()
-        }
-        assert got == expect, (node_ids, edge_pairs, got, expect)
-
-
-def test_two_phase_matches_min_label_on_random_graphs(spark):
-    import random
-
-    from rt_bigdata_spark.operators.graph import connected_components_two_phase
-
-    rng = random.Random(7)
-    for _ in range(3):
-        n = 30
-        node_ids = list(range(n))
-        edge_pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
-        edge_pairs = [(a, b) for a, b in edge_pairs if a != b]
-        expect = _cc(spark, node_ids, edge_pairs)
-        nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
-        edges = spark.createDataFrame(edge_pairs, "src long, dst long")
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_two_phase(nodes, edges).collect()
-        }
-        assert got == expect
-
-
 def _jobs_for(spark, group: str, fn) -> tuple[int, object]:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -160,13 +115,13 @@ def _jobs_for(spark, group: str, fn) -> tuple[int, object]:
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
-def test_driver_union_find_equals_distributed_loop(spark, monkeypatch):
-    """connected_components labels small edge sets with a driver-local
-    union-find (r15: the propagation loop cost ~2 scheduled jobs per
-    round over kilobyte graphs). Both paths must agree exactly — same
+def test_driver_labels_equal_distributed_loop(spark, monkeypatch):
+    """connected_components labels small edge sets on the driver
+    (``_cc_numpy_labels``) and larger ones with the distributed
+    star-contraction loop. Both paths must agree exactly — same
     min-reachable-id labels, same singleton fallthrough — on chains
-    (multi-hop propagation), multi-component graphs, empties, and
-    random graphs with self-loop-free duplicate edges."""
+    (multi-hop propagation), multi-component graphs, empties, random
+    graphs with self-loop-free duplicate edges, and string ids."""
     import random
 
     from rt_bigdata_spark.operators import graph as G
@@ -176,12 +131,13 @@ def test_driver_union_find_equals_distributed_loop(spark, monkeypatch):
         ([1, 2, 3, 10, 11, 99], [(1, 2), (2, 3), (10, 11)]),
         ([7, 8], []),
         (list(range(1, 13)), [(i, i + 1) for i in range(1, 12)]),
+        (["b", "a", "c", "zz", "y"], [("b", "c"), ("c", "a"), ("zz", "y")]),
     ]
-    rng = random.Random(11)
-    for _ in range(3):
-        n = 40
-        pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(30)]
-        cases.append((list(range(n)), [(a, b) for a, b in pairs if a != b]))
+    for seed, n, n_edges in ((7, 30, 25), (11, 40, 30)):
+        rng = random.Random(seed)
+        for _ in range(3):
+            pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(n_edges)]
+            cases.append((list(range(n)), [(a, b) for a, b in pairs if a != b]))
     for node_ids, edge_pairs in cases:
         monkeypatch.setattr(G, "_CC_DRIVER_EDGE_CAP", 10**9)
         local = _cc(spark, node_ids, edge_pairs)
@@ -190,26 +146,43 @@ def test_driver_union_find_equals_distributed_loop(spark, monkeypatch):
         assert local == dist, (node_ids, edge_pairs, local, dist)
 
 
+def test_distributed_loop_labels_long_path_or_raises(spark, monkeypatch):
+    """A 64-node path (ids in shuffled order) on the forced-distributed
+    path gets the driver's labels — per-hop label propagation needs 63
+    rounds here, star contraction a handful — and a ``max_iter`` too
+    small to converge raises instead of returning labels."""
+    import random
+
+    from rt_bigdata_spark.operators import graph as G
+
+    ids = random.Random(3).sample(range(1000), 64)
+    edges = list(zip(ids, ids[1:]))
+    monkeypatch.setattr(G, "_CC_DRIVER_EDGE_CAP", 10**9)
+    local = _cc(spark, ids, edges)
+    assert set(local.values()) == {min(ids)}
+    monkeypatch.setattr(G, "_CC_DRIVER_EDGE_CAP", -1)
+    assert _cc(spark, ids, edges) == local
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _cc(spark, ids, edges, max_iter=1)
+
+
 def test_cc_loop_runs_one_query_per_round(spark, monkeypatch):
-    """r6 verdict item 6: the CC loops must fold the convergence check
+    """r6 verdict item 6: the CC loop must fold the convergence check
     into the round's materializing action (lazy localCheckpoint whose
-    blocks are persisted by the changed-count / fingerprint aggregate
-    itself) — the eager-checkpoint + separate convergence-join pattern
-    ran TWO queries per round. Bounds are MARGINAL per-round, not
-    absolute totals (r7 ADVICE: absolute job counts shift with AQE
-    stage-job accounting across Spark versions): run the same operator
-    on a short chain (diameter 1 → 2 rounds incl. the converged
-    confirm) and a long chain (diameter 4 → 5 rounds) in the SAME
-    session, and bound the marginal jobs per EXTRA round. Fixed
+    blocks are persisted by the star-forest count itself) — the
+    eager-checkpoint + separate convergence-join pattern ran TWO
+    queries per round. Bounds are MARGINAL, not absolute totals (r7
+    ADVICE: absolute job counts shift with AQE stage-job accounting
+    across Spark versions): run the operator on a short chain and a
+    long chain in the SAME session and bound the difference. Fixed
     per-operator overhead (setup checkpoints, final join, AQE's
     per-query jobs) cancels in the difference; a two-queries-per-round
-    regression doubles the marginal cost and fails either ratio."""
+    regression doubles the marginal cost and fails the bound."""
     from rt_bigdata_spark.operators import graph as G
-    from rt_bigdata_spark.operators.graph import connected_components_two_phase
 
     # force the DISTRIBUTED loop — this test pins the loop's per-round
-    # job shape, which the r15 driver-local union-find path (taken for
-    # every graph this small) would otherwise bypass entirely
+    # job shape, which the driver-local path (taken for every graph
+    # this small) would otherwise bypass entirely
     monkeypatch.setattr(G, "_CC_DRIVER_EDGE_CAP", -1)
 
     def chain(n):  # path graph 1-2-…-n plus singletons 6,7
@@ -219,38 +192,21 @@ def test_cc_loop_runs_one_query_per_round(spark, monkeypatch):
         )
         return nodes, edges
 
-    # min-label: rounds = diameter + 1 (the converged confirm round)
-    n_short, out_short = _jobs_for(
-        spark, "cc_short", lambda: {(r.node, r.label) for r in connected_components(*chain(2)).collect()}
-    )
-    n_long, out_long = _jobs_for(
-        spark, "cc_long", lambda: {(r.node, r.label) for r in connected_components(*chain(5)).collect()}
-    )
-    assert out_long == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (6, 6), (7, 7)}
-    assert out_short == {(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (6, 6), (7, 7)}
-    extra_rounds = 5 - 2
-    marginal = (n_long - n_short) / extra_rounds
-    # one query/round measures ~2-4 jobs marginal; the two-query shape
-    # doubles it. 6 sits between with headroom for AQE accounting.
-    assert marginal <= 6, (
-        f"CC marginal jobs/round {marginal:.1f} (short={n_short}, long={n_long}) "
-        "— two-queries-per-round regression?"
-    )
-
-    # two-phase converges in O(log² n) alternations: same marginal check
-    # between a 2-node and a 5-node path.
+    # star contraction converges in O(log² n) alternations: marginal
+    # check between a 2-node and a 5-node path.
     n2_short, o2s = _jobs_for(
-        spark, "cc2_short", lambda: {(r.node, r.label) for r in connected_components_two_phase(*chain(2)).collect()}
+        spark, "cc2_short", lambda: {(r.node, r.label) for r in connected_components(*chain(2)).collect()}
     )
     n2_long, o2l = _jobs_for(
-        spark, "cc2_long", lambda: {(r.node, r.label) for r in connected_components_two_phase(*chain(5)).collect()}
+        spark, "cc2_long", lambda: {(r.node, r.label) for r in connected_components(*chain(5)).collect()}
     )
-    assert o2l == out_long and o2s == out_short
+    assert o2l == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (6, 6), (7, 7)}
+    assert o2s == {(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (6, 6), (7, 7)}
     # the long path needs at most 2 extra alternations; each alternation
-    # is 2 star passes + 1 convergence agg ⇒ one-query shape stays ≤ ~8
+    # is 2 star passes + 1 convergence count ⇒ one-query shape stays ≤ ~8
     # marginal jobs per alternation, the two-query shape doubles it.
     assert (n2_long - n2_short) <= 2 * 8, (
-        f"two-phase long-path overhead {n2_long - n2_short} jobs (short={n2_short}, "
+        f"star-contraction long-path overhead {n2_long - n2_short} jobs (short={n2_short}, "
         f"long={n2_long}) — convergence check running as a second query?"
     )
 
@@ -355,41 +311,3 @@ def test_priority_sample_matches_python_mirror_and_estimator(spark):
     full = {r.doc_id: r for r in priority_sample(df, 40, "w").collect()}
     assert len(full) == 40
     assert all(full[i].est_weight == float(w) for i, _, w in rows)
-
-
-def test_numpy_cc_labels_equal_union_find():
-    """r16: the vectorized numpy min-label/pointer-jumping CC must
-    compute exactly `_cc_union_find_local`'s function (min reachable
-    node id) on long paths (multi-round pointer jumping), cliques,
-    stars, duplicate/symmetrized edges and sparse random graphs —
-    pure-driver property test, no Spark."""
-    import random
-
-    import numpy as np
-
-    from rt_bigdata_spark.operators.graph import (
-        _cc_numpy_labels,
-        _cc_union_find_local,
-    )
-
-    rng = random.Random(16)
-    cases = [
-        [(i, i + 1) for i in range(5000, 5600)],                      # long path
-        [(a, b) for a in range(50) for b in range(a + 1, 50)],        # clique
-        [(0, i) for i in range(1, 300)],                              # star
-        [(i, i + 1) for i in range(0, 100, 2)],                       # matching
-    ]
-    for _ in range(5):
-        n = 800
-        cases.append(
-            [(rng.randrange(n) + 10**9, rng.randrange(n) + 10**9) for _ in range(700)]
-        )
-    for pairs in cases:
-        pairs = [(a, b) for a, b in pairs if a != b]
-        sym = pairs + [(b, a) for a, b in pairs]
-        ref = dict(_cc_union_find_local(sym))
-        src = np.array([a for a, _ in sym], dtype=np.int64)
-        dst = np.array([b for _, b in sym], dtype=np.int64)
-        ids, labs = _cc_numpy_labels(src, dst)
-        got = dict(zip(ids.tolist(), labs.tolist()))
-        assert got == ref

@@ -53,6 +53,17 @@ ADJUDICATED: dict[tuple[int, int, str], str] = {
         "drift-adjusted, under the 2x gate; the sweep row sampled a load "
         "block"
     ),
+    # r15→r16 (sweep on a 4-core box): paired old/new runs on the same box.
+    (15, 16, "media_dedup"): (
+        "plan path unchanged between the sweeps (no edit reaches "
+        "operators/multimodal or embedding_near_dup_lsh); paired "
+        "bench_isolated old/new min-of-3 reads 5.37 s / 5.58 s = 1.04 "
+        "(drift/noise), and alternating warm min-of-4 probes in one "
+        "session each read 2.64, 2.48 s (old) vs 2.68, 2.48 s (new) at "
+        "loadavg 1.6-2.9 — the same on both sides, so the 3.28 s sweep row "
+        "vs r15's 1.54 s is the environment, not the plan (media_dedup was "
+        "already an unchanged-code r16 mover: 1.47 s → 5.88 s in BENCH_r16)"
+    ),
 }
 
 FLOOR_SEC = 1.0
