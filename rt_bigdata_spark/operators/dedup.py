@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 
 from rt_bigdata_spark.functions.text_fns import tokenize
 from rt_bigdata_spark.operators.scale import ensure_parallelism
+from rt_bigdata_spark.operators.similarity import _lit_d, _sql_double_matrix, dot, lcg_planes
 
 # Large prime < 2^31 for the minhash permutation universe.
 _MINHASH_PRIME = 2147483647
@@ -196,9 +197,12 @@ def minhash_signatures(
     """Per-doc MinHash signature (array<long>, length ``num_hashes``).
 
     Universal-hash family h_i(x) = (a_i·x + b_i) mod p over md5-derived
-    31-bit shingle hashes; a_i/b_i are fixed odd/even constants derived
-    from i so signatures are deterministic. Entirely map-side: explode →
-    per-doc min of each permutation → one narrow groupBy on the id.
+    31-bit shingle hashes, a_i = 2i+1 and b_i = i²+1, p = 2^31-1, so
+    signatures are deterministic. Entirely map-side: explode → per-doc
+    min of each permutation → one narrow groupBy on the id. The
+    ``num_hashes`` minima are ONE ``array(min(…), …)`` SQL expression
+    (the one-call rule in ``similarity.lit_double_array``): built as
+    per-hash Column chains they were ~2,100 py4j round trips per call.
 
     ``df_cap`` (optional) drops shingles with document frequency above
     the cap before signatures — stop-shingles otherwise dominate the
@@ -211,12 +215,10 @@ def minhash_signatures(
     if df_cap is not None:
         freq = hashed.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
         hashed = hashed.join(freq.filter(F.col("df") <= df_cap).select("h"), "h")
-    mins = [
-        F.min((F.col("h") * F.lit(2 * i + 1) + F.lit(i * i + 1)) % _MINHASH_PRIME).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    sig = hashed.groupBy("doc").agg(*mins)
-    return sig.select("doc", F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("signature"))
+    mins = ",".join(
+        f"min((h * {2 * i + 1} + {i * i + 1}) % {_MINHASH_PRIME})" for i in range(num_hashes)
+    )
+    return hashed.groupBy("doc").agg(F.expr(f"array({mins})").alias("signature"))
 
 
 def _band_width(num_hashes: int, bands: int) -> int:
@@ -232,37 +234,21 @@ def _band_width(num_hashes: int, bands: int) -> int:
 def _banded(sig: DataFrame, bands: int, r: int) -> DataFrame:
     """(doc, signature, band, bucket) rows: ``bands`` LSH cells per
     signature, bucket = md5 of the band's signature slice."""
-    return sig.select(
+    return sig.selectExpr(
         "doc",
         "signature",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",", F.transform(F.slice("signature", b * r + 1, r), lambda x: x.cast("string"))
-                        )
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("doc", "signature", "bb.band", "bb.bucket")
+        f"inline(transform(sequence(0, {bands - 1}), b -> named_struct('band', b, 'bucket', "
+        f"md5(concat_ws(',', transform(slice(signature, b * {r} + 1, {r}), x -> CAST(x AS STRING)))))))",
+    )
 
 
 def _est_agreement(num_hashes: int) -> Column:
     """Estimated Jaccard between aliased signatures a/b: fraction of
     agreeing minhash positions."""
-    return (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a.signature"), F.col("b.signature"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(num_hashes)
-    ).cast("double")
+    return F.expr(
+        "CAST(size(filter(zip_with(a.signature, b.signature, (x, y) -> x = y), v -> v)) "
+        f"/ {num_hashes} AS DOUBLE)"
+    )
 
 
 def minhash_lsh_pairs(
@@ -608,91 +594,75 @@ def minhash_threshold_sweep(
     ONE LSH pass amortized across the whole grid: signatures, banding,
     and the bucket join run once at the LOOSEST threshold (the only
     wide work — identical cost to a single ``minhash_lsh_pairs`` call);
-    the grid is then a LITERAL ARRAY filtered per pair and exploded —
-    a pure projection, no join of any kind (an earlier crossJoin shape
-    tripped the registered-plan NL-join ban, and rightly: the literal
-    array expresses the same expansion inside whole-stage codegen).
-    The naive alternative re-runs the full pipeline per threshold:
-    grid-size × the scan/shuffle.
+    the grid is then counted by ``_grid_counts`` in one aggregation
+    pass over the pair set — no pair-set persist, no join against the
+    grid. The naive alternative re-runs the full pipeline per
+    threshold: grid-size × the scan/shuffle.
 
     Estimates are k/num_hashes with num_hashes a power of two, so
     ``est >= threshold`` compares identical doubles on every engine.
     Output: (threshold, n_pairs, n_docs_with_dup), zero-filled for
-    thresholds no pair reaches (broadcast-hash left joins from the
-    grid frame).
+    thresholds no pair reaches.
     """
     if not thresholds:
         raise ValueError("thresholds grid must be non-empty")
-    floor_t = min(thresholds)
-    # Both persists are OWNED here and dropped by _pair_threshold_counts
-    # once the grid-size result materializes: sig because the bucket
-    # self-join plans two full signature pipelines otherwise (the
-    # minhash_lsh_pairs rationale), pairs because the pair/doc counts
-    # are TWO consumers of the exploded hits and without it each agg
-    # branch re-plans the whole signature+bucket-join pipeline
-    # (measured 2× the single-threshold query at 30× before; ~1× after).
+    # OWNED persist, dropped once the grid counts are on the driver: the
+    # bucket self-join plans two full signature pipelines otherwise (the
+    # minhash_lsh_pairs rationale).
     sig = minhash_signatures(df, text_col, id_col, num_hashes, df_cap=df_cap).persist()
-    pairs = (
-        _lsh_pairs_from_signatures(sig, num_hashes, bands, threshold=floor_t)
-        .select("doc_a", "doc_b", "est_jaccard")
-        .persist()
-    )
-    return _pair_threshold_counts(
-        pairs, thresholds, "est_jaccard", "doc_a", "doc_b", "threshold", owned=(pairs, sig)
-    )
+    try:
+        pairs = _lsh_pairs_from_signatures(sig, num_hashes, bands, threshold=min(thresholds))
+        return _grid_counts(
+            pairs.selectExpr("doc_a AS a", "doc_b AS b", "est_jaccard AS v", "1L AS m_a", "1L AS m_b"),
+            thresholds,
+            "threshold",
+        )
+    finally:
+        sig.unpersist()
 
 
-def _pair_threshold_counts(
+def _grid_counts(
     pairs: DataFrame,
     values: "Sequence[float]",
-    value_col: str,
-    a_col: str,
-    b_col: str,
     grid_name: str,
-    owned: "Sequence[DataFrame]" = (),
+    base: "tuple[int, int]" = (0, 0),
 ) -> DataFrame:
-    """Shared grid-count kernel of the sweep audits: per grid value,
-    surviving-pair count and distinct docs involved, zero-filled. The
-    grid expansion is a literal-array filter+explode (a pure projection
-    — the registered-plan NL-join ban applies to the naive crossJoin
-    form); zero-fill is two broadcast-hash LEFT joins from the
-    grid-size frame. Caller persists ``pairs`` if deriving them was
-    expensive (two agg branches consume the explode) and passes every
-    persisted frame via ``owned``: the result is a ≤grid-size frame, so
-    this kernel MATERIALIZES it (one collect of a handful of rows),
-    unpersists all owned caches, and returns the result as a local
-    table — no sweep call leaves an unowned persisted RDD behind
+    """The one grid-count kernel of the sweep audits. ``pairs`` has one
+    row per pair: doc ids ``a``/``b``, score ``v`` and multiplicities
+    ``m_a``/``m_b`` (1 when every doc stands for itself). Per grid
+    value t: n_pairs = Σ m_a·m_b over pairs with v ≥ t, and
+    n_docs_with_dup = the number of m = 1 docs in at least one such
+    pair; ``base`` (t-independent pair and doc counts) is added to
+    both, and every grid value gets a row.
+
+    One pass: each pair explodes to its two docs, one per-doc
+    aggregate takes the doc's best score and, per grid value, the
+    weight of its surviving pairs, and one global row sums those
+    (every pair is counted from both ends, hence the halving) and
+    counts docs by best score. The ≤grid-size answer is built on the
+    driver, so callers release their persists as soon as this
+    returns — no sweep leaves an unowned persisted RDD behind
     (asserted by tests/test_plan_quality.py)."""
-    if not values:
-        raise ValueError(f"{grid_name} grid must be non-empty")
-    spark = pairs.sparkSession
     ts = sorted({float(t) for t in values})
-    grid = spark.createDataFrame([(t,) for t in ts], f"{grid_name}: double")
-    grid_arr = F.array(*[F.lit(t) for t in ts])
-    hits = pairs.select(
-        F.explode(F.filter(grid_arr, lambda t: F.col(value_col) >= t)).alias(grid_name),
-        a_col,
-        b_col,
+    lits = [_lit_d(t) for t in ts]
+    ends = pairs.selectExpr(
+        "v",
+        "m_a * m_b AS w",
+        "inline(array(named_struct('d', a, 'm', m_a), named_struct('d', b, 'm', m_b)))",
     )
-    pair_counts = hits.groupBy(grid_name).agg(F.count(F.lit(1)).alias("n_pairs"))
-    doc_counts = (
-        hits.select(grid_name, F.explode(F.array(a_col, b_col)).alias("_doc"))
-        .groupBy(grid_name)
-        .agg(F.countDistinct("_doc").alias("n_docs_with_dup"))
+    per_doc = ends.groupBy("d", "m").agg(
+        F.expr("max(v) AS best"), *[F.expr(f"sum(IF(v >= {t}, w, 0)) AS w{i}") for i, t in enumerate(lits)]
     )
-    curve = (
-        grid.join(pair_counts, grid_name, "left")
-        .join(doc_counts, grid_name, "left")
-        .select(
-            grid_name,
-            F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
-            F.coalesce("n_docs_with_dup", F.lit(0)).cast("long").alias("n_docs_with_dup"),
-        )
+    tot = per_doc.selectExpr(
+        *[f"sum(w{i})" for i in range(len(ts))],
+        *[f"count_if(m = 1 AND best >= {t})" for t in lits],
+    ).collect()[0]
+    rows = [
+        (t, (tot[i] or 0) // 2 + base[0], tot[len(ts) + i] + base[1]) for i, t in enumerate(ts)
+    ]
+    return pairs.sparkSession.createDataFrame(
+        rows, f"{grid_name} DOUBLE, n_pairs BIGINT NOT NULL, n_docs_with_dup BIGINT NOT NULL"
     )
-    rows = curve.collect()  # ≤ grid size — bounded by construction
-    for frame in owned:
-        frame.unpersist()
-    return spark.createDataFrame(rows, curve.schema)
 
 
 def embedding_tau_sweep(
@@ -717,6 +687,8 @@ def embedding_tau_sweep(
     (the embedding_near_dup_lsh contract), and every τ sees the same
     verified sim — so the curve is exactly what |pairs(τ)| would be
     from per-τ runs at recall fixed by the floor-τ LSH parameters.
+    The grid is counted by ``_grid_counts``, the one-pass kernel it
+    shares with ``minhash_threshold_sweep``, weighted by m_a·m_b.
     Output: (tau, n_pairs, n_docs_with_dup), zero-filled.
 
     EXACT-DUPLICATE COLLAPSE (r11, found by the 30× probe): a corpus
@@ -745,71 +717,39 @@ def embedding_tau_sweep(
         # the oracle definition (r11 ADVICE). Cosine caps at 1 anyway.
         raise ValueError(f"taus must be <= 1.0 (cosine ceiling), got max {max(taus)}")
     floor_t = min(taus)
-    spark = df.sparkSession
     # Collapse exact duplicates: one groupBy on the raw vector bytes.
     groups = (
         df.groupBy(F.col(vec_col).alias("_vec"))
         .agg(F.min(F.col(id_col)).alias("_rep"), F.count(F.lit(1)).alias("m"))
         .persist()
     )
-    reps = groups.select(F.col("_rep").alias(id_col), F.col("_vec").alias(vec_col))
-    # Within-group contributions are τ-independent (sim is exactly 1.0
-    # by identity): ONE bounded 1-row aggregate, folded in after the
-    # collect below.
-    w_row = groups.filter(F.col("m") >= 2).agg(
-        F.coalesce(F.sum(F.col("m") * (F.col("m") - 1) / 2), F.lit(0)).cast("long").alias("w_pairs"),
-        F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("w_docs"),
-    ).collect()[0]
-    mult = groups.select("_rep", "m")
-    pairs = (
-        embedding_near_dup_lsh(
-            reps, threshold=floor_t, id_col=id_col, vec_col=vec_col,
-            num_planes=num_planes, num_tables=num_tables, dim=dim, seed=seed,
+    try:
+        reps = groups.select(F.col("_rep").alias(id_col), F.col("_vec").alias(vec_col))
+        # Within-group contributions are τ-independent (sim is exactly 1.0
+        # by identity): ONE bounded 1-row aggregate, the kernel's base.
+        w_row = groups.filter(F.col("m") >= 2).agg(
+            F.coalesce(F.sum(F.col("m") * (F.col("m") - 1) / 2), F.lit(0)).cast("long").alias("w_pairs"),
+            F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("w_docs"),
+        ).collect()[0]
+        mult = groups.select("_rep", "m")
+        pairs = (
+            embedding_near_dup_lsh(
+                reps, threshold=floor_t, id_col=id_col, vec_col=vec_col,
+                num_planes=num_planes, num_tables=num_tables, dim=dim, seed=seed,
+            )
+            .join(mult.select(F.col("_rep").alias("id_a"), F.col("m").alias("m_a")), "id_a")
+            .join(mult.select(F.col("_rep").alias("id_b"), F.col("m").alias("m_b")), "id_b")
         )
-        .join(mult.select(F.col("_rep").alias("id_a"), F.col("m").alias("m_a")), "id_a")
-        .join(mult.select(F.col("_rep").alias("id_b"), F.col("m").alias("m_b")), "id_b")
-        .select("id_a", "id_b", "sim", "m_a", "m_b")
-        .persist()
-    )
-    ts = sorted({float(t) for t in taus})
-    grid_arr = F.array(*[F.lit(t) for t in ts])
-    hits = pairs.select(
-        F.explode(F.filter(grid_arr, lambda t: F.col("sim") >= t)).alias("tau"),
-        "id_a", "id_b", "m_a", "m_b",
-    )
-    pair_counts = hits.groupBy("tau").agg(
-        F.sum(F.col("m_a") * F.col("m_b")).alias("x_pairs")
-    )
-    # m=1 groups newly involved at τ (m≥2 groups are already counted in
-    # w_docs regardless of cross pairs — don't double count).
-    doc_counts = (
-        hits.select(
+        # m ≥ 2 groups are already counted in w_docs regardless of cross
+        # pairs, so the kernel's docs count (m = 1 docs only) adds nothing twice.
+        return _grid_counts(
+            pairs.selectExpr("id_a AS a", "id_b AS b", "sim AS v", "m_a", "m_b"),
+            taus,
             "tau",
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("_doc"), F.col("m_a").alias("_m")),
-                    F.struct(F.col("id_b").alias("_doc"), F.col("m_b").alias("_m")),
-                )
-            ).alias("dm"),
+            base=(int(w_row["w_pairs"]), int(w_row["w_docs"])),
         )
-        .filter(F.col("dm._m") == 1)
-        .groupBy("tau")
-        .agg(F.countDistinct("dm._doc").alias("x_docs"))
-    )
-    grid = spark.createDataFrame([(t,) for t in ts], "tau: double")
-    curve = (
-        grid.join(pair_counts, "tau", "left")
-        .join(doc_counts, "tau", "left")
-        .select(
-            "tau",
-            (F.coalesce("x_pairs", F.lit(0)) + F.lit(int(w_row["w_pairs"]))).cast("long").alias("n_pairs"),
-            (F.coalesce("x_docs", F.lit(0)) + F.lit(int(w_row["w_docs"]))).cast("long").alias("n_docs_with_dup"),
-        )
-    )
-    rows = curve.collect()  # ≤ grid size
-    pairs.unpersist()
-    groups.unpersist()
-    return spark.createDataFrame(rows, curve.schema)
+    finally:
+        groups.unpersist()
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32) -> DataFrame:
@@ -849,8 +789,6 @@ def embedding_near_dup_pairs(
     feed its candidates here. Sim rounds to 9 dp for stable comparison
     across engines.
     """
-    from rt_bigdata_spark.operators.similarity import dot
-
     v = (
         ensure_parallelism(df)
         .select(
@@ -880,36 +818,16 @@ def embedding_lsh_candidates(
     """Discovery HALF of the two-stage embedding dedup: distinct
     candidate ``(id_a, id_b)`` pairs that collide in ANY hyperplane-LSH
     table — ids only, no similarity math. Feed the output to
-    ``embedding_verify_pairs`` for the exact rescore. Same cell
-    construction as ``embedding_near_dup_lsh`` (which fuses both stages
+    ``embedding_verify_pairs`` for the exact rescore. The same
+    ``_emb_lsh_cells`` as ``embedding_near_dup_lsh`` (which fuses both stages
     into one plan); this split form is the production pipeline shape
     where discovery output is materialized/checkpointed between stages.
     One shuffle on the (table, bucket) cell; pair formation confined to
     cells; `distinct` dedups multi-table collisions.
     """
-    v = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    from rt_bigdata_spark.operators.similarity import dot, lcg_planes
-
-    planes_lit = F.lit([lcg_planes(num_planes, dim, seed + t) for t in range(num_tables)])
-    cells = F.transform(
-        F.sequence(F.lit(0), F.lit(num_tables - 1)),
-        lambda t: F.struct(
-            t.cast("int").alias("t"),
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(num_planes - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, i: acc
-                + F.when(
-                    dot(F.col("v"), F.element_at(F.element_at(planes_lit, t + 1), i + 1)) >= 0,
-                    F.pow(F.lit(2.0), i).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            ).alias("bkt"),
-        ),
-    )
-    sig = v.select("id", F.explode(cells).alias("cell"))
+    sig = _emb_lsh_cells(
+        ensure_parallelism(df), id_col, vec_col, num_planes, num_tables, dim, seed
+    ).select("id", "cell")
     a, b = sig.alias("a"), sig.alias("b")
     return (
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.id") < F.col("b.id")))
@@ -933,8 +851,6 @@ def embedding_verify_pairs(
     the exact similarity kernel: only over pairs some discovery stage
     (LSH bands, IVF cells, SimHash radius) already nominated.
     """
-    from rt_bigdata_spark.operators.similarity import dot
-
     v = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -974,11 +890,11 @@ def embedding_near_dup_lsh(
     with the true cosine before the threshold filter, so precision is 1
     relative to the exact operator.
 
-    The plane matrix is ONE nested-array literal, not tables×planes×dim
+    The plane matrix is ONE literal inside ONE SQL expression for the
+    whole cell computation (``_emb_lsh_cells``), not tables×planes×dim
     scalar literal nodes — the expanded form costs seconds of Catalyst
-    planning/codegen before any row moves; as a single constant the
-    bucket computation is three small higher-order functions regardless
-    of dimensionality.
+    planning/codegen before any row moves, and ``F.lit`` of the nested
+    list alone took 0.4-1 s of py4j traffic per build.
 
     ``max_pairs_per_group`` (opt-in, r12 verdict item 6): like
     ``minhash_lsh_pairs``, the full pair contract is Θ(Σ m_g²) on
@@ -991,8 +907,6 @@ def embedding_near_dup_lsh(
     ascending id. A subset of the default output (property-tested),
     same connected components when the cap covers every clique.
     """
-    from rt_bigdata_spark.operators.similarity import dot
-
     if max_pairs_per_group is not None:
         groups = (
             ensure_parallelism(df)
@@ -1052,29 +966,25 @@ def _emb_lsh_cells(
     hyperplane-LSH cell assignment of ``embedding_near_dup_lsh`` and
     its incremental form (identical plane constants, so batch and
     stream land every vector in the same cells)."""
-    from rt_bigdata_spark.operators.similarity import dot, lcg_planes
-
     v = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    planes_lit = F.lit([lcg_planes(num_planes, dim, seed + t) for t in range(num_tables)])
-    cells = F.transform(
-        F.sequence(F.lit(0), F.lit(num_tables - 1)),
-        lambda t: F.struct(
-            t.cast("int").alias("t"),
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(num_planes - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, i: acc
-                + F.when(
-                    dot(F.col("v"), F.element_at(F.element_at(planes_lit, t + 1), i + 1)) >= 0,
-                    F.pow(F.lit(2.0), i).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            ).alias("bkt"),
-        ),
+    # ONE SQL expression (the one-call rule in similarity.lit_double_array):
+    # the table-major plane matrix is a single literal, row t·num_planes+i.
+    planes = _sql_double_matrix(
+        [p for t in range(num_tables) for p in lcg_planes(num_planes, dim, seed + t)]
     )
-    return v.withColumn("cell", F.explode(cells))
+    side = (
+        f"aggregate(zip_with(v, element_at({planes}, t * {num_planes} + i + 1), (x, y) -> x * y), "
+        "0.0D, (s, z) -> s + z) >= 0"
+    )
+    cells = F.expr(
+        f"explode(transform(sequence(0, {num_tables - 1}), t -> named_struct('t', CAST(t AS INT), "
+        f"'bkt', aggregate(sequence(0, {num_planes - 1}), CAST(0 AS BIGINT), (acc, i) -> acc + "
+        f"CASE WHEN {side} THEN CAST(pow(2.0D, i) AS BIGINT) ELSE CAST(0 AS BIGINT) END))))"
+    )
+    return v.withColumn("cell", cells)
 
 
 def incremental_embedding_near_dup_lsh(
@@ -1113,8 +1023,6 @@ def incremental_embedding_near_dup_lsh(
         new_vecs = new_vecs.join(
             seen_vecs.select(F.col(id_col)), id_col, "left_anti"
         )
-    from rt_bigdata_spark.operators.similarity import dot
-
     new_cells = _emb_lsh_cells(new_vecs, id_col, vec_col, num_planes, num_tables, dim, seed)
     a, b = new_cells.alias("a"), new_cells.alias("b")
     sim = F.round(dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 9)
@@ -1512,8 +1420,6 @@ def embedding_pairs_from_cells(
     ``incremental_embedding_near_dup_lsh`` (canonical least/greatest id
     order, round-9 sim, one row per pair), with the stored side
     arriving pre-celled so nothing is re-derived per trigger."""
-    from rt_bigdata_spark.operators.similarity import dot
-
     a, b = new_cells.alias("a"), new_cells.alias("b")
     sim = F.round(dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 9)
     cand = a.join(

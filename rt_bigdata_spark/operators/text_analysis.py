@@ -8,7 +8,6 @@ expressions — fully vectorized JVM-side, no Python in the hot path.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
@@ -490,12 +489,12 @@ def bpe_pair_counts(
 
 
 # bpe_merges collects the (seq, count) vocabulary to the driver and runs
-# the merge loop locally when the vocab is at most this many rows (env
-# override SPARK_GRAFT_BPE_DRIVER_VOCAB). ~64 k rows × ~50 B ≈ a few MB —
-# the bounded-model-collect class (pq_train sums, k-means centroids), far
-# under spark.driver.maxResultSize. Above the cap the distributed
-# per-step loop below runs unchanged (the 100 TB path).
-_BPE_DRIVER_VOCAB_CAP = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB", "65536"))
+# the merge loop locally when the vocab is at most this many rows.
+# ~64 k rows × ~50 B ≈ a few MB — the bounded-model-collect class
+# (pq_train sums, k-means centroids), far under
+# spark.driver.maxResultSize. Above the cap the distributed per-step
+# loop below runs unchanged (the 100 TB path).
+_BPE_DRIVER_VOCAB_CAP = 65536
 
 
 def _bpe_merge_loop_local(
@@ -956,12 +955,26 @@ def bpe_encode_counts(
             "tok", F.size(F.split(F.trim(F.col("seq")), "  ")).alias("n_sym")
         )
     return (
-        doc_toks.join(enc_df, "tok")
+        (_join_enc(doc_toks, enc_df, "n_sym") if enc else doc_toks.join(enc_df, "tok"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
         )
+    )
+
+
+def _join_enc(doc_toks: DataFrame, enc_df: DataFrame, check_col: str) -> DataFrame:
+    """Join document tokens to a CALLER-SUPPLIED model's ``enc_df`` on
+    ``tok``, failing on out-of-vocabulary tokens instead of dropping
+    them: an inner join would silently lose every token the model has
+    no entry for and under-count ``n_words``/ids. A left join plus a
+    ``raise_error`` on a null ``check_col`` names the first missing
+    token inside the plan — no extra job. The derived-vocab path needs
+    no check: its vocab is built from the same tokens."""
+    missing = F.raise_error(F.concat(F.lit("BPE enc has no entry for token: "), F.col("tok")))
+    return doc_toks.join(enc_df, "tok", "left").withColumn(
+        check_col, F.coalesce(F.col(check_col), missing)
     )
 
 
@@ -1077,7 +1090,7 @@ def tokenizer_fertility(
             F.length("tok").alias("_n_chr"),
         )
     agg = (
-        doc_toks.join(enc_df, "tok")
+        (_join_enc(doc_toks, enc_df, "_n_sym") if enc else doc_toks.join(enc_df, "tok"))
         .groupBy("_grp")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -1201,7 +1214,7 @@ def _bpe_token_ids(
             )
         )
     return (
-        doc_toks.join(tok_ids, "tok")
+        (_join_enc(doc_toks, tok_ids, "ids") if enc else doc_toks.join(tok_ids, "tok"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_words"),

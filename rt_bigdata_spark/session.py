@@ -38,14 +38,10 @@ _DEFAULTS: dict[str, str] = {
     # regardless of size — r15 measured 32-task stages over sub-MB
     # cached frames across the dedup family (guide §2.2: fewer, larger
     # partitions). Purely a physical-layout change; results and the
-    # cached-plan keying are unaffected. Env-parameterised (r16) so the
-    # cold-JVM effect can be A/B'd in paired subprocess runs — the r15
-    # driver artifact showed the three cached-plan consumers
-    # (dedup_threshold_sweep/minhash_lsh/dup_source_matrix) regressing
-    # beyond the drift band COLD while warm UI metrics improved.
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": os.environ.get(
-        "SPARK_GRAFT_CACHED_PLAN_AQE", "true"
-    ),
+    # cached-plan keying are unaffected. A paired cold-JVM A/B (r16,
+    # scripts/ab_env.py) found the conf innocent of the r15 cold
+    # regressions of its three cached-plan consumers.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Split small-but-compute-heavy files (documents/embeddings at test
     # SF are single ~10 MB files → one task → one core without this).
     # At 100 TB the scan parallelism comes from file count anyway.

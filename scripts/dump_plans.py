@@ -52,10 +52,10 @@ FLAGSHIPS = {
     "ivfpq_cell_stats": "index occupancy audit: one scan of the code rows reading effectively the partition column, a ≤n_centroids-group HashAggregate, and the 1-row totals frame joined back via BroadcastNestedLoopJoin on a literal-true condition (1×n rows — constant work).",
     "dup_cluster_sizes": "two-level count over the CC labeling: the label groupBy reuses the clustering's final exchange; the size histogram is an O(distinct sizes) second agg — output-bounded, no new corpus-scale shuffle.",
     "temperature_mix": "size-derived stride schedule: per-source counts reduce to an O(sources) aggregate broadcast back; the rank rides the bucket-decomposed kernel (every windowspecdefinition carries the _bkt key), so a dominant source sorts in ~n/256-row tasks.",
-    "dedup_threshold_sweep": "one LSH pass for the whole threshold grid: the signature/banding pipeline and bucket self-join run once (identical to minhash_lsh); the grid expansion is a LITERAL-ARRAY filter+explode inside whole-stage codegen — zero joins of any kind on the pair set — then two output-sized aggs broadcast-hash left-joined onto the 5-row grid frame for zero-filling. NOTE: since r11 the registered audit MATERIALIZES its bounded result inside the operator (owned-persist discipline — materialize, unpersist, return a local table), so the dumped plan is the result's LocalTableScan; the discovery pipeline's exchanges are measured in SCALE.md's shuffle-bytes and 30x-probe tables instead.",
+    "dedup_threshold_sweep": "one LSH pass for the whole threshold grid: the signature/banding pipeline and bucket self-join run once (identical to minhash_lsh); the grid is counted by the one-pass grid-count kernel both sweeps share — each pair explodes to its two docs, ONE per-doc aggregate (best score + one conditional sum per grid value) feeds ONE global row, zero-filled on the driver — no pair-set persist and no join against the grid. NOTE: since r11 the registered audit MATERIALIZES its bounded result inside the operator (owned-persist discipline — materialize, unpersist, return a local table), so the dumped plan is the result's LocalTableScan; the discovery pipeline's exchanges are measured in SCALE.md's shuffle-bytes and 30x-probe tables instead.",
     "keyword_stats_4product": "composed double lateral (U1 tokenizer × U2 C2R unpivot): both explodes are pure column expressions inside one whole-stage-codegen projection over the PRE-AGGREGATED per-sku counts (explode multiplies rows only after the groupBy shrank them); the part-name dim join is broadcast.",
     "ivf_nprobe_sweep": "the whole n_probe/recall curve in one pass: the exact arm is ann_cosine_topk's broadcast-queries shape (the only corpus-scale work); nearest-cell assignment and per-query cell ranking are map-side literal-centroid expressions; the grid is a literal-array explode over k·|Q| pair rows, then one 5-group agg — no per-candidate searches, no joins beyond the tiny pair/rank lookups.",
-    "embedding_tau_sweep": "the SemDeDup τ curve with r11's exact-duplicate collapse: one groupBy on the raw vector bytes (multiplicity m), then embedding_dedup_lsh's cell-exchange + true-cosine verify over DISTINCT vectors only; the raw-corpus curve is recovered combinatorially (C(m,2) within-clique at sim 1.0, m_a·m_b per cross pair), so the plan is flat in duplication factor — the 30× probe read 23.6× before, 1.14× after. NOTE: since r11 the registered audit MATERIALIZES its bounded result inside the operator (owned-persist discipline — materialize, unpersist, return a local table), so the dumped plan is the result's LocalTableScan; the discovery pipeline's exchanges are measured in SCALE.md's shuffle-bytes and 30x-probe tables instead.",
+    "embedding_tau_sweep": "the SemDeDup τ curve with r11's exact-duplicate collapse: one groupBy on the raw vector bytes (multiplicity m), then embedding_dedup_lsh's cell-exchange + true-cosine verify over DISTINCT vectors only; the raw-corpus curve is recovered combinatorially (C(m,2) within-clique at sim 1.0 as a 1-row base, m_a·m_b per cross pair through the one-pass grid-count kernel shared with dedup_threshold_sweep), so the plan is flat in duplication factor — the 30× probe read 23.6× before, 1.14× after. NOTE: since r11 the registered audit MATERIALIZES its bounded result inside the operator (owned-persist discipline — materialize, unpersist, return a local table), so the dumped plan is the result's LocalTableScan; the discovery pipeline's exchanges are measured in SCALE.md's shuffle-bytes and 30x-probe tables instead.",
     "dsir_importance": "hashed-bigram DSIR scores: map-side bigram explode + md5 bucket hash → ONE (doc, bucket) count exchange (AQE ReusedExchange across its three logical consumers — measured); the 1024-row bucket stats and 1-row totals travel by broadcast; per-doc scoring is a broadcast join + one more doc-key agg.",
     "dup_source_matrix": "cross-source near-dup matrix on the collapse algebra: text-md5 groupBy, distinct-text MinHash/LSH (signature agg + bucket self-join — minhash_lsh's own exchanges), bounded pair↔multiplicity joins, one ≤sources²-group agg; no pair enumeration at any duplication factor. NOTE: since r11 the registered audit MATERIALIZES its bounded result inside the operator (owned-persist discipline — materialize, unpersist, return a local table), so the dumped plan is the result's LocalTableScan; the discovery pipeline's exchanges are measured in SCALE.md's shuffle-bytes and 30x-probe tables instead.",
     "ngram_novelty": "first-occurrence novelty: distinct-shingle explode → min-id-per-shingle agg (df ≥ 2 pruned — hapaxes can't be 'seen before', r12) → LEFT join back → per-doc counts; the pruned first-occurrence table is the only wide state and broadcast-eligible on Zipf corpora.",

@@ -86,6 +86,33 @@ def test_bpe_token_count_vs_whitespace(spark):
     assert len({v[1] for v in rows.values()}) == 3
 
 
+def test_bpe_enc_path_raises_on_oov_token(spark):
+    """A caller-supplied ``enc`` must not drop tokens it has no entry
+    for: every enc-path encoder fails naming the missing token, where an
+    inner join used to under-count ``n_words`` and ids silently."""
+    import pytest
+
+    from rt_bigdata_spark.operators.packing import pack_token_sequences
+    from rt_bigdata_spark.operators.text_analysis import (
+        bpe_encode_counts,
+        bpe_encode_tokens,
+        bpe_trained_encoder,
+        tokenizer_fertility,
+    )
+
+    train = spark.createDataFrame(
+        [(1, "aaa aab abab", "s0"), (2, "banana bab", "s1")], "doc_id long, text string, source string"
+    )
+    merges, enc = bpe_trained_encoder(train, n_merges=4)
+    assert [r.n_words for r in bpe_encode_counts(train, merges, enc=enc).orderBy("doc_id").collect()] == [3, 2]
+    oov = spark.createDataFrame(
+        [(1, "aaa zebra", "s0"), (2, "abab", "s1")], "doc_id long, text string, source string"
+    )
+    for encode in (bpe_encode_counts, bpe_encode_tokens, tokenizer_fertility, pack_token_sequences):
+        with pytest.raises(Exception, match="no entry for token: zebra"):
+            encode(oov, merges, enc=enc).collect()
+
+
 def test_salted_join_matches_plain_join(spark):
     import pyspark.sql.functions as F
 

@@ -493,11 +493,11 @@ def test_ivfpq_rerank_stage2_is_pruned_and_broadcast(spark):
 
 
 def test_sweep_family_leaves_no_unowned_persisted_rdds(spark):
-    """r10 verdict item 5: the sweep audits persist their bounded pair
-    sets (load-bearing — the 30× probe measured 2× without it) but the
-    persists are OWNED now: _pair_threshold_counts materializes the
-    grid-size curve, unpersists every owned cache, and hands back a
-    local table. Registered sweep queries must therefore leave the
+    """r10 verdict item 5: the sweep audits persist what their LSH pass
+    reads more than once (the signature table, the duplicate groups)
+    but the persists are OWNED: the grid-count kernel brings the
+    grid-size curve to the driver, the sweep unpersists its caches, and
+    hands back a local table. Registered sweep queries must therefore leave the
     session's persistent-RDD registry exactly as they found it — the
     compounding-cache leak (one pair set + one signature table per
     call, ADVICE r10) stays dead."""
